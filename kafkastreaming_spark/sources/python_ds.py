@@ -29,7 +29,12 @@ from pyspark.sql.datasource import (
 
 from kafkastreaming_spark.io import EVENTS_ORACLE_CTE
 from kafkastreaming_spark.registry import query
-from kafkastreaming_spark.streaming.harness import scratch_dir
+from kafkastreaming_spark.streaming.harness import (
+    await_drained,
+    scratch_dir,
+    stream_events,
+    stream_shuffle,
+)
 
 _N_SENSORS = 64
 _N_READINGS = 1000
@@ -220,8 +225,6 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    from kafkastreaming_spark.streaming.harness import stream_shuffle
-
     for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
         with stream_shuffle(spark):
             q = (
@@ -233,9 +236,7 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
+            await_drained(q, 120, "feed restart run")
         # drain proof from the query's own progress metrics — a sink
         # re-count would cost one extra job per restart
         lp = q.lastProgress
@@ -358,15 +359,11 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     outdir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     os.makedirs(outdir)
-    from kafkastreaming_spark.streaming.harness import stream_events
-
     # 2 chunks: multi-batch commit protocol demonstrated at half the
     # micro-batch scheduling cost of the default 4-chunk replay
     sdf = stream_events(spark, sf_dir, n_chunks=2, tag="pysink").select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    from kafkastreaming_spark.streaming.harness import stream_shuffle
-
     with stream_shuffle(spark):
         q = (
             sdf.writeStream.format("ks_jsonl_sink")
@@ -375,9 +372,7 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
+        await_drained(q, 120, "two-phase-commit sink")
     back = spark.read.schema("event_id long, cents long").json(
         os.path.join(outdir, "batch_*.jsonl")
     )

@@ -22,8 +22,10 @@ import shutil
 import tempfile
 import uuid
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 from kafkastreaming_spark.io import load_table
 from kafkastreaming_spark.sources.factory import file_event_stream
@@ -52,17 +54,22 @@ def scratch_dir() -> str:
         return cand
     return tempfile.gettempdir()
 
-# State/shuffle partition count for replay streaming queries.  Streaming
-# state stores cost O(partitions) per micro-batch per stateful operator
-# (provider init, snapshot/delta files, commit) regardless of data
-# volume, and AQE is disabled in streaming so nothing coalesces the
-# session's batch-sized 32 back down.  You size state partitions for
-# state VOLUME: the replay fixtures carry ≤100k rows of state, where 8
-# partitions keep every core busy inside one wave while cutting the
-# fixed per-batch state-store overhead 4× (r11, VERDICT r10 item 2 —
+# Replay-sized state-partition ceiling.  Streaming state stores cost
+# O(partitions) per micro-batch per stateful operator (provider init,
+# snapshot/delta files, commit) regardless of data volume, and AQE is
+# disabled in streaming so nothing coalesces the session's batch-sized
+# shuffle partitions back down.  You size state partitions for state
+# VOLUME: the replay fixtures carry <=100k rows of state, so they get at
+# most ONE WAVE of partitions, min(8, cores) (:func:`state_partitions`).
+# 8 was swept on 32 cores, where it cut the fixed per-batch state-store
+# overhead 4x against 32 (r11, VERDICT r10 item 2 —
 # stream_stream_join/_outer were 13.1 s each with 32-partition state).
-# At 100 TB you'd raise spark.sql.shuffle.partitions (or use RocksDB +
-# more partitions) — this knob tunes the HARNESS, not the operator.
+# On a 4-core session 8 partitions take two waves: sizing to 4 halved
+# the traced stream workload's state-commit time (5.5-5.9 -> 2.6-3.0 s
+# per pass, 110 -> 76 tasks) and cut its p80 key latency from 2.65 to
+# 1.96 s (10 A/B pairs, sf0.1).  At 100 TB you'd raise
+# spark.sql.shuffle.partitions (or use RocksDB + more partitions) — this
+# knob tunes the HARNESS, not the operator.
 _STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
 
 # State-volume threshold above which the harness stops trusting the
@@ -72,57 +79,96 @@ _STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
 # stream_session_ttl measured 447 s at 32 partitions vs 1270-1348 s at 8
 # in fresh processes: once per-group state compute dominates the fixed
 # per-partition state-store overhead, fewer-partitions-than-cores is a
-# 3x loss.  Replay fixtures (<=100k state rows) stay on _STREAM_SHUFFLE.
+# 3x loss.  Replay fixtures (<=100k state rows) stay at one wave.
 _STATE_VOLUME_THRESHOLD = int(
     os.environ.get("SPARK_GRAFT_STATE_VOLUME_THRESHOLD", "1000000")
 )
 
 
-def state_partitions(state_groups: int | None, cores: int | None = None) -> int:
+def state_partitions(state_groups: int | None, cores: int) -> int:
     """State-partition count for a stateful streaming lifecycle, derived
     from expected STATE VOLUME (``state_groups`` = rows/groups the state
     store will track; pass the best estimate available, e.g. distinct
-    keys x windows).
+    keys x windows) and the session's ``cores`` (task slots).
 
     Below :data:`_STATE_VOLUME_THRESHOLD` the fixed per-partition
     per-micro-batch state-store cost (provider init, snapshot/delta
-    files, commit) dominates, so the swept harness default
-    :data:`_STREAM_SHUFFLE` (8) wins.  At or above it, per-group state
-    compute dominates and the rule flips to >= one partition per core —
-    the r14 100x probe measured the flip at 3x (447 s @32 vs
-    1270-1348 s @8 for 10M events / ~150k Python-stateful groups).
-    ``None`` state volume means "unknown, assume replay-sized"."""
-    if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-            os.cpu_count() or _STREAM_SHUFFLE
-        )
+    files, commit) dominates, so replay-sized state gets at most one
+    wave: ``min(_STREAM_SHUFFLE, cores)``.  That is the swept 8 on 32
+    cores and 4 on a 4-core box, where 8 partitions took two waves and
+    each commit ran slower the more ran at once (sink_memory probe:
+    ~25 ms per partition commit at 1 partition, 65 ms at 4, 90 ms at 8).
+    At or above the threshold, per-group state compute dominates and
+    the rule flips to >= one partition per core, ``max(cores,
+    _STREAM_SHUFFLE)`` — the r14 100x probe measured the flip at 3x
+    (447 s @32 vs 1270-1348 s @8 for 10M events / ~150k Python-stateful
+    groups).  ``None`` state volume means "unknown, assume
+    replay-sized"."""
     if state_groups is not None and state_groups >= _STATE_VOLUME_THRESHOLD:
         return max(cores, _STREAM_SHUFFLE)
-    return _STREAM_SHUFFLE
+    return min(_STREAM_SHUFFLE, cores)
 
 
 @contextlib.contextmanager
-def stream_shuffle(spark: SparkSession, n: int | None = None):
-    """Scope spark.sql.shuffle.partitions to ``n`` (default
-    _STREAM_SHUFFLE) for the duration of a streaming query lifecycle
-    (set → start → awaitTermination → restore).  Safe because every
-    harness query runs synchronously (AvailableNow + awaitTermination)
-    and each uses a fresh checkpoint, so the captured partition count
-    never conflicts with a prior run.
+def stream_shuffle(
+    spark: SparkSession, n: int | None = None, state_groups: int | None = None
+):
+    """Scope spark.sql.shuffle.partitions to ``n`` for the duration of a
+    streaming query lifecycle (set → start → awaitTermination →
+    restore).  ``n=None`` resolves through :func:`state_partitions` with
+    ``state_groups`` and the session's ``defaultParallelism`` as its
+    cores — the task slots of the session actually running the query,
+    right for a session this engine did not build too — so every
+    lifecycle sizes its state here.  Safe because every harness query
+    runs synchronously (AvailableNow + awaitTermination) and each uses a
+    fresh checkpoint, so the captured partition count never conflicts
+    with a prior run.
 
-    Per-key overrides (r12 sweep, VERDICT r11 item 7 — 4/8/16/32 probed
-    per key at sf0.1): the Python-stateful ``stream_session_ttl`` wins
-    at 16 (more Arrow workers in flight beats per-batch state-store
-    overhead: 6.2 s vs 6.7 s at 8, 9.6 s at 4), while the pure-JVM
-    3-lifecycle ``stream_late_update`` wins at 4 (fixed per-partition
-    state-store cost × 3 lifecycles dominates: 5.3 s vs 5.6 s at 8,
-    12.0 s at 32).  Everything else keeps the fleet-swept default 8."""
+    Per-key overrides (r12 sweep on 32 cores, VERDICT r11 item 7 —
+    4/8/16/32 probed per key at sf0.1): the pure-JVM 3-lifecycle
+    ``stream_late_update`` wins at 4 (fixed per-partition state-store
+    cost x 3 lifecycles dominates: 5.3 s vs 5.6 s at 8, 12.0 s at 32),
+    as do the stream-stream joins (r13 re-sweep).  The Python-stateful
+    ``stream_session_ttl`` keeps the default (r14 sweep at 2 chunks on
+    32 cores: 8 ahead of 16, 4 and 32)."""
+    if n is None:
+        n = state_partitions(state_groups, spark.sparkContext.defaultParallelism)
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n or _STREAM_SHUFFLE))
+    spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def await_drained(q: StreamingQuery, timeout_sec: float, what: str) -> None:
+    """Wait for an AvailableNow query to drain its input and stop it
+    either way.  Raises TimeoutError if it did not finish within
+    ``timeout_sec``: a caller must never read a partial sink."""
+    try:
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"{what} did not finish in {timeout_sec}s — "
+                "refusing to return a partial result"
+            )
+    finally:
+        if q.isActive:
+            q.stop()
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """A small driver-side result (``rows`` with schema ``ddl``) as a
+    frame that plans as ``LocalTableScan``.
+
+    ``createDataFrame`` over a Python list plans as ``Scan ExistingRDD``:
+    every action on it launches a job over a Python RDD (0.28-0.40 s for
+    a 3-row noop write, warm).  Through an Arrow-converted pandas frame
+    the rows become a local relation that needs no job (~0.05 s).
+    Column names, types and nullability are exactly ``ddl``'s."""
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(
+        pd.DataFrame.from_records(rows, columns=schema.names), schema
+    )
 
 
 def replay_chunks(
@@ -227,9 +273,9 @@ def run_to_memory(
     ``shuffle_n`` forwards a per-key state-partition override to
     :func:`stream_shuffle` (see its sweep table).  When ``shuffle_n`` is
     None, ``state_groups`` (expected state-store volume) picks the
-    default via :func:`state_partitions` — replay-sized state keeps the
-    swept 8, >=threshold state sizes to the machine (r14 100x A/B:
-    3x faster at one partition per core).
+    default via :func:`state_partitions` — replay-sized state gets one
+    wave of the session's cores (at most 8), >=threshold state sizes to
+    the machine (r14 100x A/B: 3x faster at one partition per core).
 
     ``no_data_batches=False`` scopes
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to this
@@ -251,55 +297,29 @@ def run_to_memory(
     verifier / tests are single-threaded per session); callers embedding
     it elsewhere must keep that single-query-at-a-time assumption or
     leave ``no_data_batches=True``."""
-    if shuffle_n is None:
-        shuffle_n = state_partitions(state_groups)
     name = f"sink_{uuid.uuid4().hex[:12]}"
     ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    spark_ = sdf.sparkSession
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    ndb_old = spark_.conf.get(ndb_key, "true")
-    if not no_data_batches:
-        spark_.conf.set(ndb_key, "false")
-    try:
-        return _run_to_memory_inner(
-            sdf, output_mode, timeout_sec, shuffle_n, name, ckpt
-        )
-    finally:
-        spark_.conf.set(ndb_key, ndb_old)
-
-
-def _run_to_memory_inner(
-    sdf: DataFrame,
-    output_mode: str,
-    timeout_sec: int,
-    shuffle_n: int | None,
-    name: str,
-    ckpt: str,
-) -> DataFrame:
-    with stream_shuffle(sdf.sparkSession, shuffle_n):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(
-                    f"streaming query {name} did not finish in {timeout_sec}s — "
-                    "refusing to return a partial memory sink"
-                )
-        finally:
-            if q.isActive:
-                q.stop()
     spark = sdf.sparkSession
-    result = spark.table(name)
-    _SINK_TABLES.append(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    ndb_old = spark.conf.get(ndb_key, "true")
+    if not no_data_batches:
+        spark.conf.set(ndb_key, "false")
+    try:
+        with stream_shuffle(spark, shuffle_n, state_groups):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _SINK_TABLES.append(name)  # start() registered the view
+            await_drained(q, timeout_sec, f"streaming query {name}")
+    finally:
+        spark.conf.set(ndb_key, ndb_old)
+        shutil.rmtree(ckpt, ignore_errors=True)
+    return spark.table(name)
 
 
 def stream_events(
@@ -324,13 +344,14 @@ def console_sink(
 
     ``state_groups`` (expected state-store volume) sizes state partitions
     via :func:`state_partitions`, exactly like :func:`run_to_memory` —
-    replay-sized state keeps the swept 8-partition default, >=threshold
+    replay-sized state gets one wave of the session's cores, >=threshold
     state sizes to the machine (ADVICE r15: previously only run_to_memory
     had this, so large-state lifecycles through this sink silently kept
-    the 3x-slow small-state default)."""
+    the 3x-slow small-state default).  Raises TimeoutError if the replay
+    does not drain within ``timeout_sec``."""
     name = f"console_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_partitions(state_groups)):
+    with stream_shuffle(sdf.sparkSession, state_groups=state_groups):
         q = (
             sdf.writeStream.format("console")
             .option("numRows", str(num_rows))
@@ -340,10 +361,8 @@ def console_sink(
             .start()
         )
         try:
-            q.awaitTermination(timeout_sec)
+            await_drained(q, timeout_sec, f"console query {name}")
         finally:
-            if q.isActive:
-                q.stop()
             shutil.rmtree(ckpt, ignore_errors=True)
 
 
@@ -362,7 +381,7 @@ def foreach_batch_collect(
 
     name = f"feb_{uuid.uuid4().hex[:8]}"
     ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_partitions(state_groups)):
+    with stream_shuffle(sdf.sparkSession, state_groups=state_groups):
         q = (
             sdf.writeStream.foreachBatch(handle)
             .option("checkpointLocation", ckpt)
@@ -370,14 +389,7 @@ def foreach_batch_collect(
             .start()
         )
         try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(
-                    f"foreachBatch query {name} did not finish in "
-                    f"{timeout_sec}s — refusing to return a partial batch log"
-                )
+            await_drained(q, timeout_sec, f"foreachBatch query {name}")
         finally:
-            if q.isActive:
-                q.stop()
             shutil.rmtree(ckpt, ignore_errors=True)
     return seen

@@ -31,8 +31,10 @@ from kafkastreaming_spark.functions.numeric import dsum, oracle_dsum
 from kafkastreaming_spark.registry import query
 from kafkastreaming_spark.sources.factory import file_event_stream
 from kafkastreaming_spark.streaming.harness import (
+    await_drained,
     console_sink,
     foreach_batch_collect,
+    local_frame,
     replay_chunks,
     run_to_memory,
     scratch_dir,
@@ -133,8 +135,8 @@ def sink_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches = foreach_batch_collect(
         stream_events(spark, sf_dir, n_chunks=2, tag="sinkfeb")
     )
-    return spark.createDataFrame(
-        [(int(b), int(n)) for b, n in batches], "batch_id long, n_rows long"
+    return local_frame(
+        spark, [(int(b), int(n)) for b, n in batches], "batch_id long, n_rows long"
     )
 
 
@@ -178,12 +180,7 @@ def sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError("exactly-once sink did not finish in 120s")
-        finally:
-            if q.isActive:
-                q.stop()
+        await_drained(q, 120, "exactly-once sink")
     back = spark.read.parquet(out).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
     )
@@ -531,16 +528,11 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        f"{mode}-mode lifecycle did not finish in 120s"
-                    )
-            finally:
-                if q.isActive:
-                    q.stop()
-            shutil.rmtree(ckpt, ignore_errors=True)
             _SINK_TABLES.append(name)
+            try:
+                await_drained(q, 120, f"{mode}-mode lifecycle")
+            finally:
+                shutil.rmtree(ckpt, ignore_errors=True)
             return spark.table(name).count()
 
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -552,7 +544,7 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set(shuf_key, shuf_old)
 
     rows = [(m, counts[m]) for m in ("append", "update", "complete")]
-    return spark.createDataFrame(rows, "output_mode string, emitted_rows long")
+    return local_frame(spark, rows, "output_mode string, emitted_rows long")
 
 
 @query(
@@ -799,11 +791,12 @@ def stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    # Fleet default 8 state partitions: the r12 16-partition optimum was
-    # specific to 4 chunks (more Arrow workers amortized more batches);
-    # at 2 chunks the r14 sweep has 8 ahead (5.95 s vs 6.19 at 16,
-    # 7.86 at 4, 7.95 at 32 — fewer per-batch state-store commits win
-    # once the batch count is down).
+    # Default state partitions (one wave, at most 8): the r12
+    # 16-partition optimum was specific to 4 chunks (more Arrow workers
+    # amortized more batches); at 2 chunks the r14 sweep on 32 cores has
+    # 8 ahead (5.95 s vs 6.19 at 16, 7.86 at 4, 7.95 at 32 — fewer
+    # per-batch state-store commits win once the batch count is down).
+    # On a 4-core session one wave is 4, and 4 beats 8 (9.2 -> 7.8 s).
     return run_to_memory(closed, "append")
 
 
@@ -861,14 +854,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .trigger(availableNow=True)
                 .start()
             )
-            try:
-                if not q.awaitTermination(120):
-                    raise TimeoutError(
-                        "restart-harness run did not finish in 120s"
-                    )
-            finally:
-                if q.isActive:
-                    q.stop()
+            await_drained(q, 120, "restart-harness run")
 
     try:
         for f in chunks[:2]:
@@ -935,9 +921,7 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
+        await_drained(q, 120, "state-reader aggregation")
     state = spark.read.format("statestore").load(ckpt)
     # state value fields carry the INTERNAL aggregation-buffer names
     # (count/sum), not the query aliases — part of what this key pins
@@ -978,59 +962,61 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-count every later streaming key).  At 100 TB this listener
     is the backpressure signal: numInputRows vs trigger interval IS
     the consumer-lag metric Kafka dashboards chart."""
-    import time
+    import os
+    import shutil
+    import threading
     import uuid
 
     from pyspark.sql.streaming import StreamingQueryListener
 
-    from kafkastreaming_spark.streaming.harness import stream_events
-
+    name = f"listener_{uuid.uuid4().hex[:8]}"
+    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
     got: list[tuple[int, int]] = []
+    query_id: list = []
+    terminated = threading.Event()
 
     class _Listener(StreamingQueryListener):
+        # The listener bus delivers one query's events in order, so every
+        # progress event has arrived once its terminated event does.
         def onQueryStarted(self, event):
-            pass
+            if event.name == name:
+                query_id.append(event.id)
 
         def onQueryProgress(self, event):
             p = event.progress
-            got.append((p.batchId, p.numInputRows))
+            if p.name == name:
+                got.append((p.batchId, p.numInputRows))
 
         def onQueryIdle(self, event):
             pass
 
         def onQueryTerminated(self, event):
-            pass
+            if event.id in query_id:
+                terminated.set()
 
     listener = _Listener()
     spark.streams.addListener(listener)
     try:
         sdf = stream_events(spark, sf_dir, n_chunks=4, tag="listener")
-        name = f"listener_{uuid.uuid4().hex[:8]}"
-        import os
-
-        ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
         with stream_shuffle(spark):
             q = (
-                sdf.writeStream.format("memory")
+                sdf.writeStream.format("noop")
                 .queryName(name)
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
-        # progress events are ASYNC; poll briefly for the full trail
-        for _ in range(40):
-            if len({b for b, _ in got}) >= 4:
-                break
-            time.sleep(0.25)
+            await_drained(q, 120, f"listener query {name}")
+        if not terminated.wait(120):
+            raise TimeoutError(
+                f"listener never saw query {name} terminate — "
+                "refusing to return a partial progress trail"
+            )
     finally:
         spark.streams.removeListener(listener)
+        shutil.rmtree(ckpt, ignore_errors=True)
     rows = sorted({(int(b), int(r)) for b, r in got if r > 0})
-    return spark.createDataFrame(
-        rows, "batch_id long, num_input_rows long"
-    )
+    return local_frame(spark, rows, "batch_id long, num_input_rows long")
 
 
 @query(
@@ -1114,12 +1100,7 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(availableNow=True)
             .start()
         )
-        try:
-            if not q.awaitTermination(120):
-                raise TimeoutError("upsert apply loop did not finish in 120s")
-        finally:
-            if q.isActive:
-                q.stop()
+        await_drained(q, 120, "upsert apply loop")
     snap = spark.read.parquet(state["path"]).select(
         "user_id",
         F.col("event_type").alias("last_type"),

@@ -425,41 +425,53 @@ def test_state_partitions_sized_for_state_volume():
     stream_session_ttl in fresh processes: 447 s at 32 partitions vs
     1270-1348 s at 8 — once per-group state compute dominates the fixed
     per-partition state-store overhead, fewer-partitions-than-cores is a
-    3x loss.  Below the threshold the swept replay default (8) must hold
-    (stream_stream_join/_outer halved when 32 -> 8 at sf0.1, r11)."""
-    import os
-
+    3x loss.  Below the threshold replay-sized state gets at most one
+    wave of the session's cores: the swept 8 on a 32-core session, 4 on
+    a 4-core one (where 8 took two waves and doubled state-commit
+    time)."""
     from kafkastreaming_spark.streaming.harness import (
         _STATE_VOLUME_THRESHOLD,
         _STREAM_SHUFFLE,
         state_partitions,
     )
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 8)
-    # at/above threshold: >= one partition per core, never below the default
-    assert state_partitions(_STATE_VOLUME_THRESHOLD) >= cores
-    assert state_partitions(10_000_000) == max(cores, _STREAM_SHUFFLE)
-    assert state_partitions(10_000_000, cores=4) == max(4, _STREAM_SHUFFLE)
-    # below threshold / unknown: the swept replay default
-    assert state_partitions(100_000) == _STREAM_SHUFFLE
-    assert state_partitions(None) == _STREAM_SHUFFLE
-    # explicit cores override wins above threshold
-    assert state_partitions(10_000_000, cores=64) == 64
+    assert _STREAM_SHUFFLE == 8
+    # below threshold / unknown: one wave, capped at the swept default
+    for groups in (None, 100_000, _STATE_VOLUME_THRESHOLD - 1):
+        assert state_partitions(groups, cores=4) == 4
+        assert state_partitions(groups, cores=8) == 8
+        assert state_partitions(groups, cores=32) == 8
+    # at/above threshold: >= one partition per core, never below 8
+    for groups in (_STATE_VOLUME_THRESHOLD, 10_000_000):
+        assert state_partitions(groups, cores=4) == 8
+        assert state_partitions(groups, cores=8) == 8
+        assert state_partitions(groups, cores=32) == 32
+        assert state_partitions(groups, cores=64) == 64
 
 
 def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatch):
     """ADVICE r15 pin: console_sink and foreach_batch_collect size their
-    state partitions from ``state_groups`` via state_partitions(), the
-    same way run_to_memory does — a large-state lifecycle through these
-    sinks must not silently keep the 8-partition replay default."""
+    state partitions from ``state_groups`` and the running session's
+    cores (defaultParallelism) through stream_shuffle, the same way
+    run_to_memory does — a large-state lifecycle through these sinks
+    must not silently keep the replay-sized default.  The replay ceiling
+    is lowered to 2 so that the two rules give different counts on the
+    test session's 8 cores."""
+    import contextlib
+
     from kafkastreaming_spark.streaming import harness
 
-    captured: list[int | None] = []
+    monkeypatch.setattr(harness, "_STREAM_SHUFFLE", 2)
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 2
+    captured: list[int] = []
     real = harness.stream_shuffle
 
-    def spy(session, n=None):
-        captured.append(n)
-        return real(session, n)
+    @contextlib.contextmanager
+    def spy(session, n=None, state_groups=None):
+        with real(session, n, state_groups):
+            captured.append(int(session.conf.get("spark.sql.shuffle.partitions")))
+            yield
 
     monkeypatch.setattr(harness, "stream_shuffle", spy)
 
@@ -469,11 +481,68 @@ def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatc
     big = 10_000_000  # above _STATE_VOLUME_THRESHOLD
     harness.console_sink(sdf, num_rows=1, state_groups=big)
     batches = harness.foreach_batch_collect(sdf, state_groups=big)
-    assert captured == [harness.state_partitions(big)] * 2
-    assert captured[0] >= harness._STREAM_SHUFFLE
+    harness.run_to_memory(sdf, state_groups=big)
+    assert captured == [cores] * 3
     assert sum(n for _, n in batches) == sdf.sparkSession.read.parquet(
         harness.replay_chunks(spark, sf_dir, 2)
     ).count()
-    # default path (no state_groups) keeps the swept replay default
+    # default path (no state_groups): one wave, capped at the replay ceiling
     harness.console_sink(sdf, num_rows=1)
-    assert captured[-1] == harness._STREAM_SHUFFLE
+    harness.run_to_memory(sdf)
+    # an explicit per-key override wins over both rules
+    harness.run_to_memory(sdf, shuffle_n=3, state_groups=big)
+    assert captured[3:] == [2, 2, 3]
+
+
+@pytest.mark.parametrize(
+    "key, ddl",
+    [
+        ("sink_console", "batch_id long, n_rows long"),
+        ("stream_listener_metrics", "batch_id long, num_input_rows long"),
+        ("stream_late_update", "output_mode string, emitted_rows long"),
+    ],
+)
+def test_stream_result_frames_are_driver_local(spark, sf_dir, key, ddl):
+    """The small driver-side results of these keys plan as
+    LocalTableScan, not Scan ExistingRDD: materializing them launches no
+    Python RDD job.  Names, types and nullability stay exactly ``ddl``."""
+    from pyspark.sql.types import StructType
+
+    df = QUERIES[key](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "ExistingRDD" not in plan, plan
+    assert df.schema == StructType.fromDDL(ddl)
+    assert df.count() >= 2
+
+
+def test_local_frame_keeps_schema_when_empty(spark):
+    from pyspark.sql.types import StructType
+
+    from kafkastreaming_spark.streaming.harness import local_frame
+
+    ddl = "batch_id long, num_input_rows long"
+    df = local_frame(spark, [], ddl)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert df.collect() == []
+
+
+def test_console_sink_raises_on_timeout(spark, sf_dir, monkeypatch):
+    """A lifecycle that does not drain in time must raise, never return
+    as if done; the query is stopped and its checkpoint removed."""
+    import glob
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from kafkastreaming_spark.streaming import harness
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    sdf = harness.stream_events(spark, sf_dir, n_chunks=2)
+    ckpts = os.path.join(harness.scratch_dir(), "ks_ckpt_console_*")
+    before = set(glob.glob(ckpts))
+    with pytest.raises(TimeoutError, match="did not finish"):
+        harness.console_sink(sdf, num_rows=1, timeout_sec=1)
+    assert not any(q.isActive for q in spark.streams.active)
+    assert set(glob.glob(ckpts)) <= before

@@ -945,10 +945,8 @@ def run_streaming_state(rebuild: bool = False) -> None:
     # batch 3x faster (1270 s at 8 partitions vs 447 s at 32, r14).
     # r15: the rule is now the harness DEFAULT — state_partitions()
     # derives it from state volume; the probe exercises that same path.
-    from kafkastreaming_spark.streaming.harness import state_partitions
-
     t0 = time.perf_counter()
-    with stream_shuffle(spark, state_partitions(10_000_000)):
+    with stream_shuffle(spark, state_groups=10_000_000):
         q = (
             sdf100.writeStream.foreachBatch(fold_batch)
             .option("checkpointLocation", ck)
@@ -2024,8 +2022,9 @@ def run_provider_ab() -> None:
     probe and the spill sweep cover the memory-pressure side.)
 
     State partitions come from the promoted harness default:
-    state_partitions(150_000) -> 8 (below the 10^6 threshold), the same
-    sizing either provider would get in production at this volume."""
+    state_partitions(150_000, cores) -> min(8, cores) (below the 10^6
+    threshold), the same sizing either provider would get in production
+    at this volume."""
     print("building 100x fixture ...", flush=True)
     build_hundred()
 
@@ -2068,7 +2067,7 @@ def run_provider_ab() -> None:
         "hdfs_backed_default": base_cls + "HDFSBackedStateStoreProvider",
         "rocksdb": base_cls + "RocksDBStateStoreProvider",
     }
-    shuffle_n = state_partitions(n_state)
+    shuffle_n = state_partitions(n_state, spark.sparkContext.defaultParallelism)
 
     report: dict[str, dict] = {}
     for name, cls in providers.items():
