@@ -30,10 +30,9 @@ from pyspark.sql.datasource import (
 from kafkastreaming_spark.io import EVENTS_ORACLE_CTE
 from kafkastreaming_spark.registry import query
 from kafkastreaming_spark.streaming.harness import (
-    await_drained,
+    lifecycle,
     scratch_dir,
     stream_events,
-    stream_shuffle,
 )
 
 _N_SENSORS = 64
@@ -226,17 +225,15 @@ def source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
     for _ in range(8):  # bounded: ceil(MAX/BATCH) restart-resume runs
-        with stream_shuffle(spark):
-            q = (
-                spark.readStream.format("ks_feed")
-                .load()
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_drained(q, 120, "feed restart run")
+        q = lifecycle(
+            spark,
+            spark.readStream.format("ks_feed")
+            .load()
+            .writeStream.format("parquet")
+            .option("path", out),
+            "feed restart run",
+            checkpoint=ckpt,
+        )
         # drain proof from the query's own progress metrics — a sink
         # re-count would cost one extra job per restart
         lp = q.lastProgress
@@ -357,22 +354,17 @@ def sink_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         scratch_dir(), f"ks_pysink_{uuid.uuid4().hex[:12]}"
     )
     outdir = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
     os.makedirs(outdir)
     # 2 chunks: multi-batch commit protocol demonstrated at half the
     # micro-batch scheduling cost of the default 4-chunk replay
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="pysink").select(
+    sdf = stream_events(spark, sf_dir, n_chunks=2).select(
         "event_id", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.format("ks_jsonl_sink")
-            .option("outdir", outdir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q, 120, "two-phase-commit sink")
+    lifecycle(
+        spark,
+        sdf.writeStream.format("ks_jsonl_sink").option("outdir", outdir),
+        "two-phase-commit sink",
+    )
     back = spark.read.schema("event_id long, cents long").json(
         os.path.join(outdir, "batch_*.jsonl")
     )

@@ -16,22 +16,24 @@ Kafka broker (none exists in this sandbox — SURVEY.md §7.5).
 
 from __future__ import annotations
 
-import contextlib
 import os
 import shutil
 import tempfile
+import threading
 import uuid
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import StructType
 
 from kafkastreaming_spark.io import load_table
 from kafkastreaming_spark.sources.factory import file_event_stream
 
-# chunk dirs already built by THIS process: (path,) -> reuse
+# chunk dirs already built by THIS process: (path,) -> reuse; the lock
+# makes check-build-record one step for concurrent lifecycles
 _REPLAY_BUILT: set[tuple] = set()
+_REPLAY_LOCK = threading.Lock()
 
 
 def scratch_dir() -> str:
@@ -109,38 +111,6 @@ def state_partitions(state_groups: int | None, cores: int) -> int:
     return min(_STREAM_SHUFFLE, cores)
 
 
-@contextlib.contextmanager
-def stream_shuffle(
-    spark: SparkSession, n: int | None = None, state_groups: int | None = None
-):
-    """Scope spark.sql.shuffle.partitions to ``n`` for the duration of a
-    streaming query lifecycle (set → start → awaitTermination →
-    restore).  ``n=None`` resolves through :func:`state_partitions` with
-    ``state_groups`` and the session's ``defaultParallelism`` as its
-    cores — the task slots of the session actually running the query,
-    right for a session this engine did not build too — so every
-    lifecycle sizes its state here.  Safe because every harness query
-    runs synchronously (AvailableNow + awaitTermination) and each uses a
-    fresh checkpoint, so the captured partition count never conflicts
-    with a prior run.
-
-    Per-key overrides (r12 sweep on 32 cores, VERDICT r11 item 7 —
-    4/8/16/32 probed per key at sf0.1): the pure-JVM 3-lifecycle
-    ``stream_late_update`` wins at 4 (fixed per-partition state-store
-    cost x 3 lifecycles dominates: 5.3 s vs 5.6 s at 8, 12.0 s at 32),
-    as do the stream-stream joins (r13 re-sweep).  The Python-stateful
-    ``stream_session_ttl`` keeps the default (r14 sweep at 2 chunks on
-    32 cores: 8 ahead of 16, 4 and 32)."""
-    if n is None:
-        n = state_partitions(state_groups, spark.sparkContext.defaultParallelism)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def await_drained(q: StreamingQuery, timeout_sec: float, what: str) -> None:
     """Wait for an AvailableNow query to drain its input and stop it
     either way.  Raises TimeoutError if it did not finish within
@@ -154,6 +124,74 @@ def await_drained(q: StreamingQuery, timeout_sec: float, what: str) -> None:
     finally:
         if q.isActive:
             q.stop()
+
+
+# Held while a lifecycle sets its confs on the session, calls start() and
+# restores them.  That window is all the scoping a query needs: start()
+# clones the session for the stream, and the clone keeps the confs it saw
+# for the query's whole life.  Probed on Spark 4.1.2 (local[4]): restoring
+# right after start() and restoring after awaitTermination gave the same
+# state partitions on disk, the same batch and empty-batch counts with
+# noDataMicroBatches off, the same state-store provider files and the same
+# sink rows.  Child sessions (spark.newSession()) would isolate confs
+# without a lock, but a StreamingQueryListener on the parent session
+# receives no events from their queries, so the per-layer stream metrics
+# would read zero.
+_START_LOCK = threading.Lock()
+
+
+def lifecycle(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    what: str,
+    *,
+    confs: dict[str, str] | None = None,
+    state_groups: int | None = None,
+    checkpoint: str | None = None,
+    timeout_sec: float = 120,
+) -> StreamingQuery:
+    """Run one streaming query to completion: ``writer`` (the sink side of
+    ``sdf.writeStream``, without checkpoint or trigger) is started with
+    Trigger.AvailableNow on ``spark``, the session of its DataFrame, and
+    waited for in :func:`await_drained`.  Returns the stopped query, whose
+    ``name`` and ``recentProgress`` stay readable.
+
+    ``confs`` are session confs for this query only (set for its start,
+    restored after).  ``spark.sql.shuffle.partitions`` defaults to
+    :func:`state_partitions` of ``state_groups`` and the session's
+    ``defaultParallelism`` unless ``confs`` names it.  The checkpoint is a
+    fresh directory under :func:`scratch_dir`, removed on return; a caller
+    that passes its own ``checkpoint`` owns that path and keeps it."""
+    confs = dict(confs or {})
+    confs.setdefault(
+        "spark.sql.shuffle.partitions",
+        str(state_partitions(state_groups, spark.sparkContext.defaultParallelism)),
+    )
+    ckpt = checkpoint or os.path.join(
+        scratch_dir(), f"ks_ckpt_{uuid.uuid4().hex[:12]}"
+    )
+    try:
+        with _START_LOCK:
+            old = {k: spark.conf.get(k, None) for k in confs}
+            try:
+                for k, v in confs.items():
+                    spark.conf.set(k, v)
+                q = (
+                    writer.option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+            finally:
+                for k, v in old.items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
+        await_drained(q, timeout_sec, what)
+    finally:
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
+    return q
 
 
 def local_frame(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
@@ -176,7 +214,6 @@ def replay_chunks(
     sf_dir: str,
     n_chunks: int = 6,
     late_fraction: float = 0.0,
-    tag: str = "replay",
 ) -> str:
     """Write events as n_chunks arrival-ordered parquet files; optionally
     move a slice of mid-timeline rows into the last chunk (late data).
@@ -188,47 +225,47 @@ def replay_chunks(
     (each has its own checkpoint), and bench repeats.  Before this memo
     the rows-only bench paid a toPandas + parquet rewrite per
     invocation: ~12 rewrites of the full events table per repeat at
-    sf0.1 (r8 roadmap item).  ``tag`` is kept for API compatibility but
-    no longer differentiates storage."""
-    del tag  # shared storage: content depends only on the params below
+    sf0.1 (r8 roadmap item)."""
     out = os.path.join(
         scratch_dir(),
         "ks_stream_shared_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{n_chunks}"
         f"_{int(late_fraction * 10_000)}_{os.getpid()}",
     )
-    if (out, ) in _REPLAY_BUILT:
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
-    rows_per_chunk = ev.count() // n_chunks + 1
-    pdf = ev.toPandas()
-    late = None
-    if late_fraction > 0:
-        # displace rows from the 2nd chunk to arrive last → late by most of
-        # the timeline, far beyond any reasonable watermark delay
-        lo, hi = rows_per_chunk, rows_per_chunk + int(len(pdf) * late_fraction)
-        late = pdf.iloc[lo:hi]
-        pdf = pdf.drop(pdf.index[lo:hi])
-    for i in range(n_chunks):
-        chunk = pdf.iloc[i * rows_per_chunk : (i + 1) * rows_per_chunk]
-        if len(chunk) == 0:
-            continue
-        chunk.to_parquet(
-            os.path.join(out, f"chunk_{i:03d}.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-    if late is not None and len(late):
-        late.to_parquet(
-            os.path.join(out, "chunk_999_late.parquet"),
-            index=False,
-            coerce_timestamps="us",
-            allow_truncated_timestamps=True,
-        )
-    _REPLAY_BUILT.add((out,))
+    with _REPLAY_LOCK:
+        if (out,) in _REPLAY_BUILT:
+            return out
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        ev = load_table(spark, sf_dir, "events").orderBy("ts", "event_id")
+        rows_per_chunk = ev.count() // n_chunks + 1
+        pdf = ev.toPandas()
+        late = None
+        if late_fraction > 0:
+            # displace rows from the 2nd chunk to arrive last → late by most
+            # of the timeline, far beyond any reasonable watermark delay
+            lo = rows_per_chunk
+            hi = rows_per_chunk + int(len(pdf) * late_fraction)
+            late = pdf.iloc[lo:hi]
+            pdf = pdf.drop(pdf.index[lo:hi])
+        for i in range(n_chunks):
+            chunk = pdf.iloc[i * rows_per_chunk : (i + 1) * rows_per_chunk]
+            if len(chunk) == 0:
+                continue
+            chunk.to_parquet(
+                os.path.join(out, f"chunk_{i:03d}.parquet"),
+                index=False,
+                coerce_timestamps="us",
+                allow_truncated_timestamps=True,
+            )
+        if late is not None and len(late):
+            late.to_parquet(
+                os.path.join(out, "chunk_999_late.parquet"),
+                index=False,
+                coerce_timestamps="us",
+                allow_truncated_timestamps=True,
+            )
+        _REPLAY_BUILT.add((out,))
     return out
 
 
@@ -267,18 +304,26 @@ def run_to_memory(
     shuffle_n: int | None = None,
     no_data_batches: bool = True,
     state_groups: int | None = None,
+    confs: dict[str, str] | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion (AvailableNow) into a
     memory sink; returns the sink table as a batch DataFrame.
-    ``shuffle_n`` forwards a per-key state-partition override to
-    :func:`stream_shuffle` (see its sweep table).  When ``shuffle_n`` is
+    ``shuffle_n`` is a per-key state-partition override.  When it is
     None, ``state_groups`` (expected state-store volume) picks the
     default via :func:`state_partitions` — replay-sized state gets one
     wave of the session's cores (at most 8), >=threshold state sizes to
     the machine (r14 100x A/B: 3x faster at one partition per core).
 
-    ``no_data_batches=False`` scopes
-    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` to this
+    Per-key overrides (r12 sweep on 32 cores, VERDICT r11 item 7 —
+    4/8/16/32 probed per key at sf0.1): the pure-JVM 3-lifecycle
+    ``stream_late_update`` wins at 4 (fixed per-partition state-store
+    cost x 3 lifecycles dominates: 5.3 s vs 5.6 s at 8, 12.0 s at 32),
+    as do the stream-stream joins (r13 re-sweep).  The Python-stateful
+    ``stream_session_ttl`` keeps the default (r14 sweep at 2 chunks on
+    32 cores: 8 ahead of 16, 4 and 32).
+
+    ``no_data_batches=False`` sets
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` for this
     lifecycle: the trailing zero-row micro-batch exists ONLY to advance
     the watermark and fire state evictions/timeouts after the last data
     batch — operators whose evictions EMIT (outer joins, session
@@ -289,37 +334,28 @@ def run_to_memory(
     batch costs addBatch≈712 ms) for nothing.  Only pass False when the
     final sink is provably independent of the trailing batch.
 
-    Concurrency caveat (ADVICE r13): the toggle is a SESSION conf saved
-    and restored around this one lifecycle — Structured Streaming has no
-    per-query spelling for it — so any OTHER streaming query started on
-    the same session during the window silently inherits the disabled
-    trailing batch.  This harness runs one query at a time (bench /
-    verifier / tests are single-threaded per session); callers embedding
-    it elsewhere must keep that single-query-at-a-time assumption or
-    leave ``no_data_batches=True``."""
-    name = f"sink_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    spark = sdf.sparkSession
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    ndb_old = spark.conf.get(ndb_key, "true")
+    ``confs`` are further session confs for this query only (see
+    :func:`lifecycle`)."""
+    confs = dict(confs or {})
+    if shuffle_n is not None:
+        confs["spark.sql.shuffle.partitions"] = str(shuffle_n)
     if not no_data_batches:
-        spark.conf.set(ndb_key, "false")
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    name = f"sink_{uuid.uuid4().hex[:12]}"
     try:
-        with stream_shuffle(spark, shuffle_n, state_groups):
-            q = (
-                sdf.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _SINK_TABLES.append(name)  # start() registered the view
-            await_drained(q, timeout_sec, f"streaming query {name}")
+        lifecycle(
+            sdf.sparkSession,
+            sdf.writeStream.format("memory").queryName(name).outputMode(output_mode),
+            f"streaming query {name}",
+            confs=confs,
+            state_groups=state_groups,
+            timeout_sec=timeout_sec,
+        )
     finally:
-        spark.conf.set(ndb_key, ndb_old)
-        shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+        # a started query has registered the view; release_sinks
+        # tolerates a name whose start() failed
+        _SINK_TABLES.append(name)
+    return sdf.sparkSession.table(name)
 
 
 def stream_events(
@@ -327,10 +363,9 @@ def stream_events(
     sf_dir: str,
     n_chunks: int = 6,
     late_fraction: float = 0.0,
-    tag: str = "replay",
 ) -> DataFrame:
     """Convenience: chunked replay of the events table as a streaming DF."""
-    chunk_dir = replay_chunks(spark, sf_dir, n_chunks, late_fraction, tag)
+    chunk_dir = replay_chunks(spark, sf_dir, n_chunks, late_fraction)
     return file_event_stream(spark, chunk_dir)
 
 
@@ -349,21 +384,15 @@ def console_sink(
     had this, so large-state lifecycles through this sink silently kept
     the 3x-slow small-state default).  Raises TimeoutError if the replay
     does not drain within ``timeout_sec``."""
-    name = f"console_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_groups=state_groups):
-        q = (
-            sdf.writeStream.format("console")
-            .option("numRows", str(num_rows))
-            .option("truncate", "true")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            await_drained(q, timeout_sec, f"console query {name}")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    lifecycle(
+        sdf.sparkSession,
+        sdf.writeStream.format("console")
+        .option("numRows", str(num_rows))
+        .option("truncate", "true"),
+        "console query",
+        state_groups=state_groups,
+        timeout_sec=timeout_sec,
+    )
 
 
 def foreach_batch_collect(
@@ -379,17 +408,11 @@ def foreach_batch_collect(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         seen.append((batch_id, batch_df.count()))
 
-    name = f"feb_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(sdf.sparkSession, state_groups=state_groups):
-        q = (
-            sdf.writeStream.foreachBatch(handle)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            await_drained(q, timeout_sec, f"foreachBatch query {name}")
-        finally:
-            shutil.rmtree(ckpt, ignore_errors=True)
+    lifecycle(
+        sdf.sparkSession,
+        sdf.writeStream.foreachBatch(handle),
+        "foreachBatch query",
+        state_groups=state_groups,
+        timeout_sec=timeout_sec,
+    )
     return seen

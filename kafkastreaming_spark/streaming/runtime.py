@@ -19,6 +19,8 @@ custom-stateful surface stays on ``applyInPandasWithState``.
 
 from __future__ import annotations
 
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -31,15 +33,14 @@ from kafkastreaming_spark.functions.numeric import dsum, oracle_dsum
 from kafkastreaming_spark.registry import query
 from kafkastreaming_spark.sources.factory import file_event_stream
 from kafkastreaming_spark.streaming.harness import (
-    await_drained,
     console_sink,
     foreach_batch_collect,
+    lifecycle,
     local_frame,
     replay_chunks,
     run_to_memory,
     scratch_dir,
     stream_events,
-    stream_shuffle,
 )
 
 
@@ -66,7 +67,7 @@ def source_kafka(spark: SparkSession, sf_dir: str) -> DataFrame:
     across the drained replay, so the memory sink equals the plain
     batch filter — no envelope needed, the twin is exact.
     """
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="src")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     parsed = sdf.filter(F.col("event_type").isin("click", "purchase")).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
@@ -90,7 +91,7 @@ def sink_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink table every micro-batch, so after the replay drains the
     table IS the full-input aggregate — exactly the batch groupBy the
     DuckDB twin computes (decimal-exact sum via the dsum discipline)."""
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="sinkmem")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     agg = sdf.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         dsum("value", "sum_value"),
@@ -130,11 +131,9 @@ def sink_console(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14 with the oracle's rpc/range moved in lockstep): two
     micro-batches are the minimal multi-batch proof, at half the
     scheduling cost of four."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="sinkcon")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     console_sink(sdf.select("event_id", "ts", "event_type", "value"), num_rows=3)
-    batches = foreach_batch_collect(
-        stream_events(spark, sf_dir, n_chunks=2, tag="sinkfeb")
-    )
+    batches = foreach_batch_collect(sdf)
     return local_frame(
         spark, [(int(b), int(n)) for b, n in batches], "batch_id long, n_rows long"
     )
@@ -166,28 +165,20 @@ def sink_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="e1")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     out = os.path.join(scratch_dir(), f"ks_e1_{uuid.uuid4().hex[:12]}")
-    ckpt = out + "_ckpt"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"batch={batch_id}"))
 
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    try:
+        lifecycle(spark, sdf.writeStream.foreachBatch(write_batch), "exactly-once sink")
+        back = spark.read.parquet(out).groupBy("event_type").agg(
+            F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
         )
-        await_drained(q, 120, "exactly-once sink")
-    back = spark.read.parquet(out).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value")
-    )
-    result = back.localCheckpoint(eager=True)  # materialize before cleanup
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(out, ignore_errors=True)  # no orphaned batch dirs per run
-    return result
+        return back.localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        shutil.rmtree(out, ignore_errors=True)  # no orphaned batch dirs per run
 
 
 @query(
@@ -235,7 +226,7 @@ def stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark itself is ms-granular).  Windows whose end passed that
     horizon are exactly the append-mode output after AvailableNow
     drains (the trailing no-data batch flushes the final eviction)."""
-    sdf = stream_events(spark, sf_dir, n_chunks=6, late_fraction=0.02, tag="wm")
+    sdf = stream_events(spark, sf_dir, n_chunks=6, late_fraction=0.02)
     agg = (
         sdf.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
@@ -281,7 +272,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing and the drained sink equals the plain batch interval join,
     exactly."""
     clicks = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="ssj_c")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -291,7 +282,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="ssj_p")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -393,7 +384,7 @@ def stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulation the key exists to demonstrate (state written in batch
     1 is read+updated in batch 2); the batch-twin oracle is closed-form
     in n_chunks, so the variant stays hash-checked."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="stateful")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     updates = sdf.groupBy("user_id").applyInPandasWithState(
         _running_user_agg,
         outputStructType=_STATEFUL_OUT,
@@ -469,81 +460,31 @@ def stream_late_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts-ordered split lands mid-hour, so windows still span the chunk
     boundary and update > complete keeps demonstrating the mode
     difference."""
-    import os
-    import shutil
-    import uuid
     from concurrent.futures import ThreadPoolExecutor
 
-    from kafkastreaming_spark.streaming.harness import (
-        _SINK_TABLES,
-        scratch_dir,
-    )
-
-    def agg_for(mode: str):
-        sdf = stream_events(spark, sf_dir, n_chunks=2, tag=f"mode_{mode}")
-        return (
-            sdf.withWatermark("ts", "10 minutes")
+    def emitted_rows(mode: str) -> int:
+        agg = (
+            stream_events(spark, sf_dir, n_chunks=2)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "60 minutes").alias("w"))
             .agg(F.count(F.lit(1)).alias("n_events"))
         )
-
-    # shuffle_n=4: swept optimum for this 3-lifecycle JVM-only key
-    # (stream_shuffle docstring, r12 sweep).  Only APPEND needs the
-    # trailing no-data batch (it flushes the final evictions the
-    # mode's output is defined by); update-mode eviction emits
-    # nothing and complete re-emits the identical table (r13).
-    counts = {
-        "append": run_to_memory(
-            agg_for("append"), "append", shuffle_n=4
+        # shuffle_n=4: swept optimum for this 3-lifecycle JVM-only key
+        # (run_to_memory docstring, r12 sweep).  Only APPEND needs the
+        # trailing no-data batch (it flushes the final evictions the
+        # mode's output is defined by); update-mode eviction emits
+        # nothing and complete re-emits the identical table (r13).
+        return run_to_memory(
+            agg, mode, shuffle_n=4, no_data_batches=mode == "append"
         ).count()
-    }
 
-    # r17 (guide §2.6 overlap independent jobs): update and complete are
-    # independent lifecycles (separate checkpoints/sinks) that need the
-    # SAME session confs (noDataMicroBatches=false, 4 state partitions),
-    # so both confs are scoped ONCE around a 2-thread pool instead of
-    # per-lifecycle — run_to_memory's per-call save/set/restore is not
-    # thread-safe (interleaved restores can leak a conf), which is why
-    # the pool does its own start/await/stop with the confs pinned
-    # outside it.  Batch counts, commit logs, and per-mode semantics are
-    # unchanged (each query captures its confs at start); A/B 3/3 pairs
-    # faster, median ratio 0.78.
-    ndb_key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    shuf_key = "spark.sql.shuffle.partitions"
-    ndb_old = spark.conf.get(ndb_key, "true")
-    shuf_old = spark.conf.get(shuf_key)
-    spark.conf.set(ndb_key, "false")
-    spark.conf.set(shuf_key, "4")
-    try:
-
-        def run(mode: str) -> int:
-            name = f"sink_{uuid.uuid4().hex[:12]}"
-            ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-            q = (
-                agg_for(mode)
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            _SINK_TABLES.append(name)
-            try:
-                await_drained(q, 120, f"{mode}-mode lifecycle")
-            finally:
-                shutil.rmtree(ckpt, ignore_errors=True)
-            return spark.table(name).count()
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = {m: pool.submit(run, m) for m in ("update", "complete")}
-            for m, f in futs.items():
-                counts[m] = f.result()
-    finally:
-        spark.conf.set(ndb_key, ndb_old)
-        spark.conf.set(shuf_key, shuf_old)
-
-    rows = [(m, counts[m]) for m in ("append", "update", "complete")]
+    # The three lifecycles are independent (own checkpoints and sinks),
+    # so they overlap: on a 4-core session all three at once beat append
+    # first and then the other two in 6 of 6 alternating pairs (median
+    # 3.80 -> 3.12 s at sf0.1).
+    modes = ("append", "update", "complete")
+    with ThreadPoolExecutor(max_workers=len(modes)) as pool:
+        rows = list(zip(modes, pool.map(emitted_rows, modes)))
     return local_frame(spark, rows, "output_mode string, emitted_rows long")
 
 
@@ -602,7 +543,7 @@ def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven.  At 100 TB state is bounded by the watermark horizon per
     side, exactly as the inner variant."""
     clicks = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="sso_c")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "click")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -612,7 +553,7 @@ def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     purchases = (
-        stream_events(spark, sf_dir, n_chunks=2, tag="sso_p")
+        stream_events(spark, sf_dir, n_chunks=2)
         .filter(F.col("event_type") == "purchase")
         .withWatermark("ts", "10 minutes")
         .select(
@@ -778,7 +719,7 @@ def stream_session_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     of n_chunks (every emitted session is either gap-closed — its
     closer drains in SOME batch — or tail-timed-out by the final
     watermark, which depends only on max(ts))."""
-    sdf = stream_events(spark, sf_dir, n_chunks=2, tag="sess_ttl")
+    sdf = stream_events(spark, sf_dir, n_chunks=2)
     closed = (
         sdf.withWatermark("ts", "10 minutes")
         .select("user_id", "ts", "event_id")
@@ -833,7 +774,7 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    src_all = replay_chunks(spark, sf_dir, n_chunks=4, tag="ckptr")
+    src_all = replay_chunks(spark, sf_dir, n_chunks=4)
     run_id = uuid.uuid4().hex[:12]
     base = os.path.join(scratch_dir(), f"ks_ckptr_{run_id}")
     src, out, ckpt = (os.path.join(base, d) for d in ("src", "out", "ckpt"))
@@ -846,15 +787,12 @@ def stream_checkpoint_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def drain() -> None:
-        with stream_shuffle(spark):
-            q = (
-                file_event_stream(spark, src)
-                .writeStream.foreachBatch(write_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_drained(q, 120, "restart-harness run")
+        lifecycle(
+            spark,
+            file_event_stream(spark, src).writeStream.foreachBatch(write_batch),
+            "restart-harness run",
+            checkpoint=ckpt,
+        )
 
     try:
         for f in chunks[:2]:
@@ -903,25 +841,20 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import uuid
 
-    from kafkastreaming_spark.streaming.harness import stream_events
-
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="streader")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     agg = sdf.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.round(F.col("value") * 100).cast("long")).alias("cents"),
     )
-    name = f"streader_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
-    with stream_shuffle(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        await_drained(q, 120, "state-reader aggregation")
+    # the answer is read from the state files, so the sink is noop; the
+    # checkpoint stays, because the returned frame reads it lazily
+    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_streader_{uuid.uuid4().hex[:8]}")
+    lifecycle(
+        spark,
+        agg.writeStream.format("noop").outputMode("complete"),
+        "state-reader aggregation",
+        checkpoint=ckpt,
+    )
     state = spark.read.format("statestore").load(ckpt)
     # state value fields carry the INTERNAL aggregation-buffer names
     # (count/sum), not the query aliases — part of what this key pins
@@ -962,15 +895,11 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-count every later streaming key).  At 100 TB this listener
     is the backpressure signal: numInputRows vs trigger interval IS
     the consumer-lag metric Kafka dashboards chart."""
-    import os
-    import shutil
-    import threading
     import uuid
 
     from pyspark.sql.streaming import StreamingQueryListener
 
     name = f"listener_{uuid.uuid4().hex[:8]}"
-    ckpt = os.path.join(scratch_dir(), f"ks_ckpt_{name}")
     got: list[tuple[int, int]] = []
     query_id: list = []
     terminated = threading.Event()
@@ -997,16 +926,12 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     listener = _Listener()
     spark.streams.addListener(listener)
     try:
-        sdf = stream_events(spark, sf_dir, n_chunks=4, tag="listener")
-        with stream_shuffle(spark):
-            q = (
-                sdf.writeStream.format("noop")
-                .queryName(name)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            await_drained(q, 120, f"listener query {name}")
+        sdf = stream_events(spark, sf_dir, n_chunks=4)
+        lifecycle(
+            spark,
+            sdf.writeStream.format("noop").queryName(name),
+            f"listener query {name}",
+        )
         if not terminated.wait(120):
             raise TimeoutError(
                 f"listener never saw query {name} terminate — "
@@ -1014,7 +939,6 @@ def stream_listener_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         spark.streams.removeListener(listener)
-        shutil.rmtree(ckpt, ignore_errors=True)
     rows = sorted({(int(b), int(r)) for b, r in got if r > 0})
     return local_frame(spark, rows, "batch_id long, num_input_rows long")
 
@@ -1063,7 +987,7 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kafkastreaming_spark.streaming.harness import stream_events
 
-    sdf = stream_events(spark, sf_dir, n_chunks=4, tag="upsq")
+    sdf = stream_events(spark, sf_dir, n_chunks=4)
     base = os.path.join(
         scratch_dir(), f"ks_upsert_{uuid.uuid4().hex[:12]}"
     )
@@ -1090,25 +1014,16 @@ def stream_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         newest.write.mode("overwrite").parquet(out)
         state["path"] = out
 
-    with stream_shuffle(spark):
-        q = (
-            sdf.writeStream.foreachBatch(apply_batch)
-            .option(
-                "checkpointLocation",
-                os.path.join(base, "_ckpt"),
-            )
-            .trigger(availableNow=True)
-            .start()
+    try:
+        lifecycle(spark, sdf.writeStream.foreachBatch(apply_batch), "upsert apply loop")
+        snap = spark.read.parquet(state["path"]).select(
+            "user_id",
+            F.col("event_type").alias("last_type"),
+            F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
         )
-        await_drained(q, 120, "upsert apply loop")
-    snap = spark.read.parquet(state["path"]).select(
-        "user_id",
-        F.col("event_type").alias("last_type"),
-        F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
-    )
-    result = snap.localCheckpoint(eager=True)
-    shutil.rmtree(base, ignore_errors=True)
-    return result
+        return snap.localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 @query(
@@ -1134,65 +1049,40 @@ def stream_rocksdb_state(
 
     The full events replay runs the per-type count+cents aggregation
     through micro-batches with the provider flipped to RocksDB for
-    EXACTLY this query (session conf saved/restored in finally — other
-    streaming keys keep their default provider), and the final complete
-    state is hash-checked against the batch oracle: state encode/decode
-    through RocksDB must change NOTHING.
+    EXACTLY this query (a lifecycle conf — other streaming keys keep
+    their default provider), and the final complete state is
+    hash-checked against the batch oracle: state encode/decode through
+    RocksDB must change NOTHING.
 
     Exact ints only (count + cent sums) — the state round-trip is
     byte-faithful by construction."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    rocks = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    # r17: changelog checkpointing is RocksDB's incremental-checkpoint
-    # mode (commit uploads the batch's changelog instead of snapshotting
-    # SST files every commit) — the setting this key's docstring already
-    # names as the at-scale story; off by default in Spark 4.  State
-    # contents are identical (replayed on recovery); A/B 3/3 pairs
-    # faster locally (medians 2.55 -> 2.31 s).
-    chlog_key = (
+    rocks = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider"
+        ),
+        # r17: changelog checkpointing is RocksDB's incremental-checkpoint
+        # mode (commit uploads the batch's changelog instead of
+        # snapshotting SST files every commit) — the setting this key's
+        # docstring already names as the at-scale story; off by default
+        # in Spark 4.  State contents are identical (replayed on
+        # recovery); A/B 3/3 pairs faster locally (medians 2.55 -> 2.31 s).
         "spark.sql.streaming.stateStore.rocksdb."
-        "changelogCheckpointing.enabled"
+        "changelogCheckpointing.enabled": "true",
+    }
+    sdf = stream_events(spark, sf_dir, n_chunks=n_chunks)
+    agg = sdf.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.round(F.col("value") * 100).cast("bigint"))
+        .cast("long")
+        .alias("cents"),
     )
-    from kafkastreaming_spark.streaming.harness import (
-        run_to_memory,
-        stream_events,
-    )
-
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    try:
-        chlog_prev = spark.conf.get(chlog_key)
-    except Exception:
-        chlog_prev = None
-    spark.conf.set(conf_key, rocks)
-    spark.conf.set(chlog_key, "true")
-    try:
-        sdf = stream_events(spark, sf_dir, n_chunks=n_chunks, tag="rocks")
-        agg = sdf.groupBy("event_type").agg(
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("long")
-            .alias("cents"),
-        )
-        out = run_to_memory(agg, output_mode="complete")
-        return out.localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-        if chlog_prev is None:
-            spark.conf.unset(chlog_key)
-        else:
-            spark.conf.set(chlog_key, chlog_prev)
+    out = run_to_memory(agg, output_mode="complete", confs=rocks)
+    return out.localCheckpoint(eager=True)
 
 
 _DDWW_BUILT: set = set()
+_DDWW_LOCK = threading.Lock()
 
 
 def _ddww_chunks(
@@ -1206,46 +1096,47 @@ def _ddww_chunks(
     import os
     import shutil
 
-    base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks, tag="ddww")
+    base_dir = replay_chunks(spark, sf_dir, n_chunks=n_chunks)
     out = os.path.join(
         scratch_dir(),
         f"ks_ddww_{os.path.basename(sf_dir.rstrip('/'))}"
         f"_{n_chunks}_{os.getpid()}",
     )
-    if out in _DDWW_BUILT:
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out)
-    chunks = sorted(
-        f for f in os.listdir(base_dir) if f.endswith(".parquet")
-    )
-    # Batch order in FileStreamSource is mtime order; fast sequential
-    # copies can tie at Hadoop's ms granularity, so stamp explicit
-    # strictly-increasing mtimes (ADVICE r12) — a scrambled order would
-    # deliver early originals below the watermark and drop them as late.
-    base_mtime = 1_600_000_000
-    for i, f in enumerate(chunks):
-        dst = os.path.join(out, f)
-        shutil.copyfile(os.path.join(base_dir, f), dst)
-        os.utime(dst, (base_mtime + i, base_mtime + i))
-    dups = pd.concat(
-        [
-            pd.read_parquet(os.path.join(base_dir, chunks[0])),
-            pd.read_parquet(os.path.join(base_dir, chunks[-1])),
-        ]
-    )
-    dups = dups[dups["event_id"] % 7 == 0]
-    dup_path = os.path.join(out, "chunk_999_dup.parquet")
-    dups.to_parquet(
-        dup_path,
-        index=False,
-        coerce_timestamps="us",
-        allow_truncated_timestamps=True,
-    )
-    os.utime(dup_path, (base_mtime + len(chunks), base_mtime + len(chunks)))
-    _DDWW_BUILT.add(out)
+    with _DDWW_LOCK:
+        if out in _DDWW_BUILT:
+            return out
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        chunks = sorted(
+            f for f in os.listdir(base_dir) if f.endswith(".parquet")
+        )
+        # Batch order in FileStreamSource is mtime order; fast sequential
+        # copies can tie at Hadoop's ms granularity, so stamp explicit
+        # strictly-increasing mtimes (ADVICE r12) — a scrambled order
+        # would deliver early originals below the watermark and drop them
+        # as late.
+        base_mtime = 1_600_000_000
+        for i, f in enumerate(chunks):
+            dst = os.path.join(out, f)
+            shutil.copyfile(os.path.join(base_dir, f), dst)
+            os.utime(dst, (base_mtime + i, base_mtime + i))
+        dups = pd.concat(
+            [
+                pd.read_parquet(os.path.join(base_dir, chunks[0])),
+                pd.read_parquet(os.path.join(base_dir, chunks[-1])),
+            ]
+        )
+        dups = dups[dups["event_id"] % 7 == 0]
+        dup_path = os.path.join(out, "chunk_999_dup.parquet")
+        dups.to_parquet(
+            dup_path,
+            index=False,
+            coerce_timestamps="us",
+            allow_truncated_timestamps=True,
+        )
+        os.utime(dup_path, (base_mtime + len(chunks), base_mtime + len(chunks)))
+        _DDWW_BUILT.add(out)
     return out
-
 
 @query(
     "stream_dedup_watermark",

@@ -160,7 +160,7 @@ def test_streaming_dedup_within_watermark(spark, sf_dir):
     import shutil
     import tempfile
 
-    shared = replay_chunks(spark, sf_dir, n_chunks=3, tag="deduptest")
+    shared = replay_chunks(spark, sf_dir, n_chunks=3)
     chunk_dir = os.path.join(tempfile.gettempdir(), "ks_stream_deduptest_priv")
     shutil.rmtree(chunk_dir, ignore_errors=True)
     shutil.copytree(shared, chunk_dir)
@@ -452,37 +452,41 @@ def test_state_partitions_sized_for_state_volume():
 def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatch):
     """ADVICE r15 pin: console_sink and foreach_batch_collect size their
     state partitions from ``state_groups`` and the running session's
-    cores (defaultParallelism) through stream_shuffle, the same way
-    run_to_memory does — a large-state lifecycle through these sinks
-    must not silently keep the replay-sized default.  The replay ceiling
-    is lowered to 2 so that the two rules give different counts on the
-    test session's 8 cores."""
-    import contextlib
-
+    cores (defaultParallelism), the same way run_to_memory does — a
+    large-state lifecycle through these sinks must not silently keep the
+    replay-sized default.  Each count is the one the query reports for
+    its state operator.  The replay ceiling is lowered to 2 so that the
+    two rules give different counts on the test session's 8 cores."""
     from kafkastreaming_spark.streaming import harness
 
     monkeypatch.setattr(harness, "_STREAM_SHUFFLE", 2)
     cores = spark.sparkContext.defaultParallelism
     assert cores > 2
-    captured: list[int] = []
-    real = harness.stream_shuffle
+    queries = []
+    real = harness.lifecycle
 
-    @contextlib.contextmanager
-    def spy(session, n=None, state_groups=None):
-        with real(session, n, state_groups):
-            captured.append(int(session.conf.get("spark.sql.shuffle.partitions")))
-            yield
+    def spy(*args, **kwargs):
+        queries.append(real(*args, **kwargs))
+        return queries[-1]
 
-    monkeypatch.setattr(harness, "stream_shuffle", spy)
+    monkeypatch.setattr(harness, "lifecycle", spy)
 
-    sdf = harness.stream_events(spark, sf_dir, n_chunks=2).select(
-        "event_id", "ts", "event_type", "value"
+    def partitions() -> list[int]:
+        return [
+            q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+            for q in queries
+        ]
+
+    sdf = (
+        harness.stream_events(spark, sf_dir, n_chunks=2)
+        .select("event_id", "ts", "event_type", "value")
+        .dropDuplicates(["event_id"])
     )
     big = 10_000_000  # above _STATE_VOLUME_THRESHOLD
     harness.console_sink(sdf, num_rows=1, state_groups=big)
     batches = harness.foreach_batch_collect(sdf, state_groups=big)
     harness.run_to_memory(sdf, state_groups=big)
-    assert captured == [cores] * 3
+    assert partitions() == [cores] * 3
     assert sum(n for _, n in batches) == sdf.sparkSession.read.parquet(
         harness.replay_chunks(spark, sf_dir, 2)
     ).count()
@@ -491,7 +495,94 @@ def test_sinks_thread_state_groups_to_state_partitions(spark, sf_dir, monkeypatc
     harness.run_to_memory(sdf)
     # an explicit per-key override wins over both rules
     harness.run_to_memory(sdf, shuffle_n=3, state_groups=big)
-    assert captured[3:] == [2, 2, 3]
+    assert partitions()[3:] == [2, 2, 3]
+
+
+_SCOPED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
+
+
+def test_lifecycle_confs_reach_only_the_query(spark, sf_dir):
+    """A lifecycle's confs shape its own query — its state partitions
+    and no trailing no-data batch — and the session keeps its values,
+    also when start() raises."""
+    from kafkastreaming_spark.streaming import harness
+
+    before = {k: spark.conf.get(k, None) for k in _SCOPED}
+    confs = {_SCOPED[0]: "3", _SCOPED[1]: "false"}
+    sdf = harness.stream_events(spark, sf_dir, n_chunks=2)
+    q = harness.lifecycle(
+        spark,
+        sdf.withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+        .writeStream.format("noop"),
+        "scoped confs",
+        confs=confs,
+    )
+    progress = q.recentProgress
+    assert [p["stateOperators"][0]["numShufflePartitions"] for p in progress] == [3, 3]
+    assert all(p["numInputRows"] > 0 for p in progress)
+    assert {k: spark.conf.get(k, None) for k in _SCOPED} == before
+
+    with pytest.raises(Exception, match="no_such_sink"):
+        harness.lifecycle(
+            spark, sdf.writeStream.format("no_such_sink"), "bad sink", confs=confs
+        )
+    assert {k: spark.conf.get(k, None) for k in _SCOPED} == before
+    assert not spark.streams.active
+
+
+def test_concurrent_lifecycles_keep_their_own_confs(spark, sf_dir):
+    from concurrent.futures import ThreadPoolExecutor
+
+    from kafkastreaming_spark.streaming import harness
+
+    sdf = harness.stream_events(spark, sf_dir, n_chunks=2).dropDuplicates(
+        ["event_id"]
+    )
+
+    def run(n: int) -> set[int]:
+        q = harness.lifecycle(
+            spark,
+            sdf.writeStream.format("noop"),
+            f"{n} partitions",
+            confs={_SCOPED[0]: str(n)},
+        )
+        return {
+            p["stateOperators"][0]["numShufflePartitions"] for p in q.recentProgress
+        }
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        assert list(pool.map(run, (2, 5))) == [{2}, {5}]
+
+
+def test_lifecycle_rocksdb_changelog_on_caller_checkpoint(spark, sf_dir, tmp_path):
+    """Provider and changelog confs reach the query's state store: the
+    caller-owned checkpoint keeps RocksDB changelog files, and the
+    session's provider stays unset."""
+    from kafkastreaming_spark.streaming import harness
+
+    provider = "spark.sql.streaming.stateStore.providerClass"
+    ckpt = str(tmp_path / "ckpt")
+    agg = harness.stream_events(spark, sf_dir, n_chunks=2).groupBy("event_type").count()
+    harness.lifecycle(
+        spark,
+        agg.writeStream.format("noop").outputMode("complete"),
+        "rocksdb changelog",
+        confs={
+            provider: "org.apache.spark.sql.execution.streaming.state."
+            "RocksDBStateStoreProvider",
+            "spark.sql.streaming.stateStore.rocksdb."
+            "changelogCheckpointing.enabled": "true",
+        },
+        checkpoint=ckpt,
+    )
+    files = [f for _, _, fs in os.walk(os.path.join(ckpt, "state")) for f in fs]
+    assert any(f.endswith(".changelog") for f in files), files
+    assert not any(f.endswith(".delta") for f in files), files
+    assert spark.conf.get(provider, None) is None
 
 
 @pytest.mark.parametrize(
@@ -540,7 +631,7 @@ def test_console_sink_raises_on_timeout(spark, sf_dir, monkeypatch):
         StreamingQuery, "awaitTermination", lambda self, timeout=None: False
     )
     sdf = harness.stream_events(spark, sf_dir, n_chunks=2)
-    ckpts = os.path.join(harness.scratch_dir(), "ks_ckpt_console_*")
+    ckpts = os.path.join(harness.scratch_dir(), "ks_ckpt_*")
     before = set(glob.glob(ckpts))
     with pytest.raises(TimeoutError, match="did not finish"):
         harness.console_sink(sdf, num_rows=1, timeout_sec=1)
