@@ -186,15 +186,118 @@ def contract_line(base: dict, per_query: dict[str, float]) -> str:
     return line
 
 
+def time_keys(spark, queries, keys, sf_dir: str, repeats: int) -> dict:
+    """Time each key in ``keys`` over a full ``noop`` materialization:
+    one untimed warm run, then ``repeats`` timed runs.  Returns the
+    section's BENCH_DETAIL fields, each a dict by key: ``queries``
+    (median sec), ``repeat_times``, ``warm_times``, ``spread`` (max/min
+    over the repeats) and ``errors`` (keys that raised, which get no
+    timing)."""
+    from kafkastreaming_spark.streaming.harness import release_sinks
+
+    fields = ("queries", "repeat_times", "warm_times", "spread", "errors")
+    out: dict[str, dict] = {f: {} for f in fields}
+    for key in keys:
+        def run():
+            queries[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+        samples = []
+        try:
+            # Every key gets ONE untimed warm run before its timed repeats.
+            # First executions pay lazy one-time inits no memo pre-warm covers —
+            # ICU collation tables (fn_collation 2.81 s → 0.34 s in r12), JCE
+            # cipher/digest providers, Python DataSource registration + worker
+            # spin-up, first Arrow/pandas kernels after a memo build, ORC/XML
+            # reader classes, UDTF analyze-phase workers — and a named
+            # cold-init allowlist just moved the first-sample outlier to
+            # whichever family was named NEXT (r13: the r12 seven went to
+            # spread ≤1.24 while sink_exactly_once/udtf_analyze/source_orc/…
+            # popped above 2).  Warming uniformly makes the timed repeats pure
+            # steady state, so spread >2 now MEANS environment noise
+            # (VERDICT r12 item 3).  Medians move little (median-of-3 already
+            # discarded one cold sample); the protocol note is in BASELINE.md.
+            w0 = time.perf_counter()
+            run()
+            # The warm run is excluded from the median but its cost must
+            # stay auditable (ADVICE r13): warm_sec per key lets a
+            # cross-round diff account for init cost the steady-state
+            # medians no longer carry.
+            warm = time.perf_counter() - w0
+            for _ in range(repeats):
+                t0 = time.perf_counter()
+                run()
+                samples.append(time.perf_counter() - t0)
+        except Exception as exc:  # noqa: BLE001 — one broken key must not
+            # take down the whole suite report (round 4: a fixture schema
+            # change crashed the run and the driver recorded nothing).
+            out["errors"][key] = f"{type(exc).__name__}: {exc}"[:300]
+            continue
+        out["queries"][key] = round(statistics.median(samples), 3)
+        out["repeat_times"][key] = [round(t, 3) for t in samples]
+        out["warm_times"][key] = round(warm, 3)
+        release_sinks(spark, keep=2)  # driver memory hygiene (harness.py)
+        # max/min within one key's repeats: background-load outliers on the
+        # same box show up as spread here, so a cross-round per-key diff can
+        # mechanically separate "noisy environment" from "real regression"
+        # (round 6: driver saw set_except at 4.03 s vs 0.29 s committed with
+        # no plan change — nothing in the artifact proved it was noise).
+        out["spread"][key] = round(max(samples) / max(min(samples), 1e-9), 2)
+    return out
+
+
+def _canary_peak(canary: dict, probe: str) -> float:
+    """The slower of a canary's pre/post samples of ``probe`` (0 if absent)."""
+    return max(
+        (canary.get("pre") or {}).get(probe, 0),
+        (canary.get("post") or {}).get(probe, 0),
+    )
+
+
+def vs_prev(detail: dict, rnd: int) -> dict | None:
+    """Canary-normalized per-key diff against the newest BENCH_DETAIL of
+    an earlier round run on the same core count (VERDICT r16 item 10):
+    pure reporting, zero protocol change.  Cross-round per-key
+    comparisons keep getting poisoned by host drift (r16: a 2.3x canary
+    swing made 237 untouched keys look regressed), so the detail file
+    records the canary ratio next to every per-key ratio — a reader can
+    mechanically separate "box got slower" from "plan regressed".
+    Files without a ``cpus`` stamp predate r17 and are 32-core runs.
+    ``None`` when no earlier detail matches."""
+    found = []
+    for path in glob.glob(os.path.join(REPO, "BENCH_DETAIL_r*.json")):
+        m = re.search(r"BENCH_DETAIL_r(\d+)\.json$", path)
+        if m and int(m.group(1)) < rnd:
+            found.append((int(m.group(1)), path))
+    for _, path in sorted(found, reverse=True):
+        with open(path) as f:
+            prev = json.load(f)
+        if prev.get("cpus", 32) == detail["cpus"]:
+            break
+    else:
+        return None
+    pc, cc = prev.get("canary") or {}, detail["canary"]
+    return {
+        "prev_file": os.path.basename(path),
+        "prev_cpus": prev.get("cpus"),
+        "canary_ratio": {
+            probe: round(_canary_peak(cc, probe) / pp, 3)
+            for probe in ("jvm_sec", "shuffle_sec", "job_overhead_sec")
+            if (pp := _canary_peak(pc, probe)) and _canary_peak(cc, probe)
+        },
+        "per_key_ratio": {
+            k: round(detail["queries"][k] / p, 3)
+            for k, p in (prev.get("queries") or {}).items()
+            if k in detail["queries"] and p
+        },
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 
     from kafkastreaming_spark.all import ORACLES, QUERIES
     from kafkastreaming_spark.session import get_session
-    from kafkastreaming_spark.streaming.harness import (
-        release_sinks as _release_sinks,
-    )
 
     spark = get_session("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -260,57 +363,10 @@ def main() -> None:
     # batch-twin spellings) but their wall time measures replay-harness
     # I/O, micro-batch scheduling, or iterative training — not engine
     # throughput — so they stay in the separate harness section.
-    # Every key gets ONE untimed warm run before its timed repeats.
-    # First executions pay lazy one-time inits no memo pre-warm covers —
-    # ICU collation tables (fn_collation 2.81 s → 0.34 s in r12), JCE
-    # cipher/digest providers, Python DataSource registration + worker
-    # spin-up, first Arrow/pandas kernels after a memo build, ORC/XML
-    # reader classes, UDTF analyze-phase workers — and a named
-    # cold-init allowlist just moved the first-sample outlier to
-    # whichever family was named NEXT (r13: the r12 seven went to
-    # spread ≤1.24 while sink_exactly_once/udtf_analyze/source_orc/…
-    # popped above 2).  Warming uniformly makes the timed repeats pure
-    # steady state, so spread >2 now MEANS environment noise
-    # (VERDICT r12 item 3).  Medians move little (median-of-3 already
-    # discarded one cold sample); the protocol note is in BASELINE.md.
-    per_query: dict[str, float] = {}
-    per_repeat: dict[str, list[float]] = {}
-    per_warm: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for key in sorted(set(ORACLES) - HARNESS_KEYS):
-        samples = []
-        try:
-            w0 = time.perf_counter()
-            QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # untimed warm run (see block comment)
-            # The warm run is excluded from the median but its cost must
-            # stay auditable (ADVICE r13): warm_sec per key lets a
-            # cross-round diff account for init cost the steady-state
-            # medians no longer carry.
-            per_warm[key] = round(time.perf_counter() - w0, 3)
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                # noop sink: full materialization, no driver-side collection
-                QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001 — one broken key must not
-            # take down the whole suite report (round 4: a fixture schema
-            # change crashed the run and the driver recorded nothing).
-            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
-            continue
-        per_query[key] = round(statistics.median(samples), 3)
-        per_repeat[key] = [round(s, 3) for s in samples]
-        _release_sinks(spark, keep=2)  # driver memory hygiene (harness.py)
-        # max/min within one key's repeats: background-load outliers on the
-        # same box show up as spread here, so a cross-round per-key diff can
-        # mechanically separate "noisy environment" from "real regression"
-        # (round 6: driver saw set_except at 4.03 s vs 0.29 s committed with
-        # no plan change — nothing in the artifact proved it was noise).
-        spread[key] = round(max(samples) / max(min(samples), 1e-9), 2)
+    head = time_keys(
+        spark, QUERIES, sorted(set(ORACLES) - HARNESS_KEYS), sf_dir, repeats
+    )
+    per_query, errors = head["queries"], head["errors"]
 
     # Harness-cost keys (sketch envelopes, trained indexes, streaming
     # replays — all hash-oracled since r10) are timed the SAME way but
@@ -318,32 +374,8 @@ def main() -> None:
     # performance trail) — excluded from suite_wall_sec so the headline
     # stays a pure engine-throughput number (BASELINE.md protocol;
     # per-round headline key counts recorded there).
-    ro_query: dict[str, float] = {}
-    ro_repeat: dict[str, list[float]] = {}
-    ro_warm: dict[str, float] = {}
-    ro_spread: dict[str, float] = {}
-    ro_errors: dict[str, str] = {}
-    for key in sorted((set(QUERIES) - set(ORACLES)) | HARNESS_KEYS):
-        samples = []
-        try:
-            w0 = time.perf_counter()
-            QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()  # untimed warm run (headline-loop block comment)
-            ro_warm[key] = round(time.perf_counter() - w0, 3)
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.perf_counter() - t0)
-        except Exception as exc:  # noqa: BLE001
-            ro_errors[key] = f"{type(exc).__name__}: {exc}"[:300]
-            continue
-        ro_query[key] = round(statistics.median(samples), 3)
-        ro_repeat[key] = [round(s, 3) for s in samples]
-        _release_sinks(spark, keep=2)
-        ro_spread[key] = round(max(samples) / max(min(samples), 1e-9), 2)
+    harness_keys = sorted((set(QUERIES) - set(ORACLES)) | HARNESS_KEYS)
+    harness = time_keys(spark, QUERIES, harness_keys, sf_dir, repeats)
 
     canary_post = _canary(spark)
 
@@ -367,17 +399,18 @@ def main() -> None:
         "queries": per_query,
         "sf": sf_val,
         "repeats": repeats,
-        # Executor core count the run actually used (r17): the driver's
-        # end-of-round 8-core scaling run also lands a BENCH_DETAIL file,
-        # and without this field the r8-idle regression gate can't tell
-        # a deliberately-downsized run from a plan regression.
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        # Executor core count the run actually used (r17), read from the
+        # live session: the driver's end-of-round 8-core scaling run also
+        # lands a BENCH_DETAIL file, and without this field the r8-idle
+        # regression gate can't tell a deliberately-downsized run from a
+        # plan regression.
+        "cpus": spark.sparkContext.defaultParallelism,
         "partial": partial,
         "errors": errors,
-        "repeat_times": per_repeat,
-        "warm_times": per_warm,
-        "spread": spread,
-        "noisy": sorted(k for k, s in spread.items() if s > 2.0),
+        "repeat_times": head["repeat_times"],
+        "warm_times": head["warm_times"],
+        "spread": head["spread"],
+        "noisy": sorted(k for k, s in head["spread"].items() if s > 2.0),
         "canary": {"pre": canary_pre, "post": canary_post},
         "harness_section": {
             # renamed from "rows_only" in r16 (VERDICT r15 item 6): the
@@ -386,53 +419,16 @@ def main() -> None:
             # "harness-cost keys outside the headline protocol set".
             # Tools diffing old artifacts read both names.
             "note": "hash-oracled harness keys (r10); excluded from headline",
-            "queries": ro_query,
-            "total_sec": round(sum(ro_query.values()), 3),
-            "repeat_times": ro_repeat,
-            "warm_times": ro_warm,
-            "spread": ro_spread,
-            "errors": ro_errors,
+            **harness,
+            "total_sec": round(sum(harness["queries"].values()), 3),
         },
     }
-    # Canary-normalized diff vs the PREVIOUS round's detail (VERDICT r16
-    # item 10): pure reporting, zero protocol change.  Cross-round per-key
-    # comparisons keep getting poisoned by host drift (r16: a 2.3x canary
-    # swing made 237 untouched keys look regressed), so the detail file
-    # now records the canary ratio next to every per-key ratio — a reader
-    # can mechanically separate "box got slower" from "plan regressed".
     rnd = current_round()
-    prev_path = os.path.join(REPO, f"BENCH_DETAIL_r{rnd - 1:02d}.json")
-    if os.path.exists(prev_path):
-        try:
-            with open(prev_path) as f:
-                prev = json.load(f)
-            pc, cc = prev.get("canary") or {}, detail["canary"]
-            canary_ratio = {
-                probe: round(
-                    max(cc["pre"][probe], cc["post"][probe])
-                    / max(pp, 1e-9),
-                    3,
-                )
-                for probe in ("jvm_sec", "shuffle_sec", "job_overhead_sec")
-                if (
-                    pp := max(
-                        (pc.get("pre") or {}).get(probe, 0),
-                        (pc.get("post") or {}).get(probe, 0),
-                    )
-                )
-            }
-            detail["vs_prev"] = {
-                "prev_file": os.path.basename(prev_path),
-                "prev_cpus": prev.get("cpus"),
-                "canary_ratio": canary_ratio,
-                "per_key_ratio": {
-                    k: round(per_query[k] / p, 3)
-                    for k, p in (prev.get("queries") or {}).items()
-                    if k in per_query and p
-                },
-            }
-        except Exception:  # noqa: BLE001 — reporting must never kill a run
-            pass
+    try:
+        if (prev := vs_prev(detail, rnd)) is not None:
+            detail["vs_prev"] = prev
+    except Exception:  # noqa: BLE001 — reporting must never kill a run
+        pass
 
     for name in ("BENCH_DETAIL.json", f"BENCH_DETAIL_r{rnd:02d}.json"):
         with open(os.path.join(REPO, name), "w") as f:

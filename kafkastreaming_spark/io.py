@@ -57,6 +57,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     TIMESTAMP_NTZ under Spark 4's inferTimestampNTZ) across rounds, so we
     dispatch on the actual scan schema instead of assuming one encoding.
     Either way downstream operators see a session-UTC TIMESTAMP column.
+    The call to :func:`prepare` gives a caller-owned session the engine's
+    confs; after the first call on a session it changes nothing.
     """
     prepare(spark)
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
@@ -99,15 +101,6 @@ def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # ---------------------------------------------------------------------------
 
 _ROW_GROUP_CACHE: dict[str, int] = {}
-
-
-def session_cores() -> int:
-    """Executor-core count for scale-adaptive sizing: the driver contract's
-    ``SPARK_GRAFT_CPUS`` if set, else the host's CPU count (r17 — factored
-    out of spread()/source_binaryfile, which each duplicated it)."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (
-        os.cpu_count() or 8
-    )
 
 
 def _parquet_row_groups(uri: str) -> int | None:
@@ -160,12 +153,11 @@ def spread(
     this adds nothing.  When it fires, the shuffle moves only the columns
     the caller has already projected; pass a high-cardinality ``key`` to
     hash-partition (deterministic, no sort-before-repartition cost) —
-    without one, round-robin is used.
+    without one, round-robin is used.  ``cores`` defaults to the
+    ``defaultParallelism`` of the session ``df`` belongs to.
     """
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df  # kill switch: plans revert to the raw scan (A/B, debug)
     if cores is None:
-        cores = session_cores()
+        cores = df.sparkSession.sparkContext.defaultParallelism
     width = scan_width(df)
     if width is None or width >= max(2, cores // 4):
         return df

@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 from kafkastreaming_spark.io import (
     EVENTS_ORACLE_CTE,
     load_table,
-    session_cores,
     spread,
 )
 from kafkastreaming_spark.registry import query
@@ -411,8 +410,9 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split packing) — 5k scheduling-overhead tasks at sf0.1, measured 8x
     # slower than reading the same bytes in core-sized tasks.  coalesce
     # (shuffle-free) packs the splits down to max(cores, total/128MB)
-    # tasks; on a big media lake the 128MB-per-task floor keeps the target
-    # at or above the planned partition count, so coalesce is a no-op.
+    # tasks, where cores is the session's defaultParallelism; on a big
+    # media lake the 128MB-per-task floor keeps the target at or above
+    # the planned partition count, so coalesce is a no-op.
     # The size probe is driver-side os.scandir, which only works for
     # local paths — on an object store it degrades to the raw plan
     # instead of crashing (ADVICE r16).
@@ -425,9 +425,8 @@ def source_binaryfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     except OSError:
         tot_bytes = None
     if tot_bytes is not None:
-        bf = bf.coalesce(
-            max(session_cores(), 1 + tot_bytes // (128 << 20))
-        )
+        cores = spark.sparkContext.defaultParallelism
+        bf = bf.coalesce(max(cores, 1 + tot_bytes // (128 << 20)))
     return bf.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
         .cast("long")

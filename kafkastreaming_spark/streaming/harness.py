@@ -71,8 +71,8 @@ def scratch_dir() -> str:
 # per pass, 110 -> 76 tasks) and cut its p80 key latency from 2.65 to
 # 1.96 s (10 A/B pairs, sf0.1).  At 100 TB you'd raise
 # spark.sql.shuffle.partitions (or use RocksDB + more partitions) — this
-# knob tunes the HARNESS, not the operator.
-_STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
+# constant tunes the HARNESS, not the operator.
+_STREAM_SHUFFLE = 8
 
 # State-volume threshold above which the harness stops trusting the
 # low-overhead replay default and sizes state partitions to the machine
@@ -82,9 +82,7 @@ _STREAM_SHUFFLE = int(os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8"))
 # in fresh processes: once per-group state compute dominates the fixed
 # per-partition state-store overhead, fewer-partitions-than-cores is a
 # 3x loss.  Replay fixtures (<=100k state rows) stay at one wave.
-_STATE_VOLUME_THRESHOLD = int(
-    os.environ.get("SPARK_GRAFT_STATE_VOLUME_THRESHOLD", "1000000")
-)
+_STATE_VOLUME_THRESHOLD = 1_000_000
 
 
 def state_partitions(state_groups: int | None, cores: int) -> int:

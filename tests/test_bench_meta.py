@@ -177,3 +177,51 @@ def test_contract_line_small_suite_is_complete(monkeypatch):
     per_query = {"a": 1.0, "b": 2.0}
     parsed = json.loads(bench.contract_line(base, per_query))
     assert parsed["queries"] == {"b": 2.0, "a": 1.0}
+
+
+def test_vs_prev_picks_newest_earlier_detail_with_same_cpus(monkeypatch, tmp_path):
+    """vs_prev diffs against the newest earlier-round BENCH_DETAIL run on
+    the same core count (unstamped files are 32-core runs), never the
+    current round's own file, and a canary probe missing on either side
+    drops only that probe's ratio."""
+    import json
+
+    import bench
+
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    canary = {"pre": {"jvm_sec": 1.0, "shuffle_sec": 2.0}, "post": {}}
+    for name, extra in (
+        ("BENCH_DETAIL_r05.json", {}),
+        ("BENCH_DETAIL_r06.json", {"cpus": 8}),
+        ("BENCH_DETAIL_r07.json", {"cpus": 32}),
+        ("BENCH_DETAIL_r08.json", {"cpus": 8}),
+        ("BENCH_DETAIL_r06_baseline.json", {"cpus": 8}),
+    ):
+        body = {"queries": {"k": 2.0}, "canary": canary, **extra}
+        (tmp_path / name).write_text(json.dumps(body))
+    cur_canary = {"pre": {"jvm_sec": 2.0}, "post": {"jvm_sec": 3.0}}
+    detail = {"cpus": 8, "queries": {"k": 1.0}, "canary": cur_canary}
+
+    out = bench.vs_prev(detail, rnd=9)
+    assert out["prev_file"] == "BENCH_DETAIL_r08.json"
+    assert out["canary_ratio"] == {"jvm_sec": 3.0}
+    assert out["per_key_ratio"] == {"k": 0.5}
+    assert bench.vs_prev(detail, rnd=8)["prev_file"] == "BENCH_DETAIL_r06.json"
+    assert bench.vs_prev({**detail, "cpus": 32}, rnd=7)["prev_file"] == (
+        "BENCH_DETAIL_r05.json"
+    )
+    assert bench.vs_prev({**detail, "cpus": 4}, rnd=9) is None
+
+
+def test_time_keys_times_each_key_and_captures_errors(spark):
+    import bench
+
+    def broken(spark, sf_dir):
+        raise ValueError("boom")
+
+    queries = {"ok": lambda spark, sf_dir: spark.range(10), "bad": broken}
+    out = bench.time_keys(spark, queries, ["bad", "ok"], "unused", repeats=2)
+    assert set(out["queries"]) == {"ok"}
+    assert len(out["repeat_times"]["ok"]) == 2
+    assert out["warm_times"]["ok"] >= 0 and out["spread"]["ok"] >= 1.0
+    assert out["errors"] == {"bad": "ValueError: boom"}

@@ -183,8 +183,7 @@ def _single_rg(spark, tmp_path, name: str):
     return spark.read.parquet(p)
 
 
-def test_spread_fires_on_single_row_group(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_fires_on_single_row_group(spark, tmp_path):
     df = _single_rg(spark, tmp_path, "srg")
     out = spread(df, key="id", cores=16)
     assert out is not df
@@ -192,13 +191,12 @@ def test_spread_fires_on_single_row_group(spark, tmp_path, monkeypatch):
     assert out.rdd.getNumPartitions() == 16
 
 
-def test_spread_noop_on_multi_row_group_layout(spark, tmp_path, monkeypatch):
+def test_spread_noop_on_multi_row_group_layout(spark, tmp_path):
     """A healthy layout (many row groups >= cores//4) must pass through
     untouched — this is the 100 TB safety branch."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     p = str(tmp_path / "mrg")
     os.makedirs(p, exist_ok=True)
     pq.write_table(
@@ -210,13 +208,12 @@ def test_spread_noop_on_multi_row_group_layout(spark, tmp_path, monkeypatch):
     assert spread(df, key="id", cores=16) is df  # 20 >= 16//4
 
 
-def test_spread_noop_on_many_files(spark, tmp_path, monkeypatch):
+def test_spread_noop_on_many_files(spark, tmp_path):
     """>256 input files = the layout already parallelizes (or is too
     expensive to probe): spread must not touch it."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
     p = str(tmp_path / "manyfiles")
     os.makedirs(p, exist_ok=True)
     tbl = pa.table({"id": [1]})
@@ -226,21 +223,13 @@ def test_spread_noop_on_many_files(spark, tmp_path, monkeypatch):
     assert spread(df, key="id", cores=4096) is df
 
 
-def test_spread_noop_on_non_parquet_scan(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_noop_on_non_parquet_scan(spark, tmp_path):
     p = str(tmp_path / "csvsrc")
     spark.createDataFrame([(1,)], "id long").write.mode("overwrite").csv(p)
     df = spark.read.schema("id long").csv(p)
     assert spread(df, key="id", cores=64) is df
 
 
-def test_spread_kill_switch(spark, tmp_path, monkeypatch):
-    df = _single_rg(spark, tmp_path, "kill")
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD", "0")
-    assert spread(df, key="id", cores=16) is df
-
-
-def test_spread_noop_without_file_scan(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD", raising=False)
+def test_spread_noop_without_file_scan(spark):
     df = spark.range(100)  # no file source below the plan
     assert spread(df, key="id", cores=64) is df

@@ -588,7 +588,7 @@ def test_lm_score_open_vocab_regime_matches_broadcast(spark, sf_dir, monkeypatch
     _drop_memo("lm_model")  # don't leak the gate-0 parquet model to later tests
 
 
-def test_semdedup_trained_recall_beats_standin():
+def test_semdedup_trained_recall_beats_standin(spark):
     """Judge r7 item 1 wiring criterion: bucketing on the trained
     K=ivf_k(n)~sqrt(n) quantizer must (a) still only PRUNE the exact
     pair scan (drops are a subset of llm_cosine_dedup's later members)
@@ -597,9 +597,6 @@ def test_semdedup_trained_recall_beats_standin():
     K=45): trained 0.30 vs stand-in 0.21 — the 200-vector smoke
     fixture is below K-means' useful granularity, so the production
     claim is pinned at the driver's correctness scale instead."""
-    from kafkastreaming_spark.session import get_session
-
-    spark = get_session("tests", master="local[8]", shuffle_partitions=8)
     sf = "/root/testdata/sf0.01"
     exact_later = {
         r["vec_b"] for r in QUERIES["llm_cosine_dedup"](spark, sf).collect()
@@ -628,16 +625,14 @@ def test_semdedup_trained_recall_beats_standin():
     assert inv[0]["drops_confirmed"] is True
 
 
-def test_trained_centroids_shared_index_shape():
+def test_trained_centroids_shared_index_shape(spark):
     """One trained quantizer serves every trained-IVF consumer: the
     memoized (session, sf_dir) centroid table has exactly ivf_k(n) rows
     and both llm_ann_ivf_trained and llm_semdedup_trained resolve to the
     SAME cached DataFrame object (train once, probe many)."""
     from kafkastreaming_spark.operators.kmeans import ivf_k, trained_centroids
-    from kafkastreaming_spark.session import get_session
     from kafkastreaming_spark.io import load_table
 
-    spark = get_session("tests", master="local[8]", shuffle_partitions=8)
     sf = "/root/testdata/sf0.001"
     n = load_table(spark, sf, "embeddings").count()
     c1 = trained_centroids(spark, sf)

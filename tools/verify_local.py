@@ -22,11 +22,14 @@ the judge and driver can diff).
 ``--axis`` (VERDICT r13 item 5) folds ONE config-robustness axis into the
 run so the four r13 one-time proofs (adversarial partitioning, AQE off,
 hostile host TZ, small driver heap) hold under drift instead of decaying:
-each axis is an env knob applied BEFORE the JVM starts, and the chosen
-axis is recorded in the report JSON.  ``--axis auto`` (the ``--report``
-default) rotates by round number — r14=aqe_off, r15=tz_kiritimati,
-r16=heap3g, r17=local7, r18=splits128m, then repeats — so every fifth
-round re-proves each axis.  ``--axis none`` opts out (ad-hoc key checks).
+a JVM-start axis is an env var applied BEFORE the JVM starts, a runtime
+conf axis is set on the session after it is prepared.  The report records
+each axis setting as the live session reads it back after the last key,
+and the run fails if one differs from what the axis asked for.
+``--axis auto`` (the ``--report`` default) rotates by round number —
+r14=aqe_off, r15=tz_kiritimati, r16=heap3g, r17=local7, r18=splits128m,
+then repeats — so every fifth round re-proves each axis.  ``--axis none``
+opts out (ad-hoc key checks).
 """
 
 from __future__ import annotations
@@ -74,34 +77,45 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
-# Config-robustness axes (VERDICT r13 item 5).  Every knob is an env var
-# read by session.get_session (or the JVM) BEFORE the first session builds,
-# so applying an axis is valid only in a fresh process — which verify_local
-# always is.  The r13 manual sweeps proved 304/304 under each; the rotation
-# keeps that true as the code drifts.
-AXES: dict[str, dict[str, str]] = {
-    "aqe_off": {"SPARK_GRAFT_AQE": "false"},
+# Config-robustness axes (VERDICT r13 item 5), in two kinds.  JVM-start
+# axes are env vars read when the first session builds, so they are set
+# before get_session — valid only in a fresh process, which verify_local
+# always is.  Runtime conf axes override a conf session.prepare() sets, so
+# they are set with spark.conf.set after get_session; prepare() never
+# writes them again on that session.
+ENV_AXES: dict[str, dict[str, str]] = {
     "tz_kiritimati": {"TZ": "Pacific/Kiritimati"},
     "heap3g": {"SPARK_GRAFT_DRIVER_MEM": "3g"},
+    # the master becomes local[7], so defaultParallelism, shuffle
+    # partitions and spread() all size to 7
     "local7": {"SPARK_GRAFT_CPUS": "7"},
-    # fifth axis (r14): cluster-default split size — the local session
-    # pins 2 MB splits for scan parallelism on the tiny fixtures, so
-    # this proves no key's CORRECTNESS leans on split count / per-split
-    # row grouping (a 128 MB split swallows every fixture file whole).
-    "splits128m": {"SPARK_GRAFT_MAX_PARTITION_BYTES": "128m"},
 }
+CONF_AXES: dict[str, dict[str, str]] = {
+    "aqe_off": {"spark.sql.adaptive.enabled": "false"},
+    # cluster-default split size — the local session pins 2 MB splits for
+    # scan parallelism on the tiny fixtures, so this proves no key's
+    # CORRECTNESS leans on split count / per-split row grouping (a 128 MB
+    # split swallows every fixture file whole).
+    "splits128m": {"spark.sql.files.maxPartitionBytes": "128m"},
+}
+AXES = {**ENV_AXES, **CONF_AXES}
 # r14 starts the rotation at aqe_off (VERDICT r13 item 5 names it).
 _AXIS_ORDER = ["aqe_off", "tz_kiritimati", "heap3g", "local7", "splits128m"]
 
+# How the live session shows each env setting; a conf reads as itself.
+_LIVE_ENV = {
+    "TZ": lambda spark: spark._jvm.java.util.TimeZone.getDefault().getID(),
+    "SPARK_GRAFT_DRIVER_MEM": lambda spark: spark.conf.get("spark.driver.memory"),
+    "SPARK_GRAFT_CPUS": lambda spark: str(spark.sparkContext.defaultParallelism),
+}
 
-def _apply_axis(name: str) -> int | None:
-    """Set the axis env knobs; returns a shuffle-partition override (the
-    local7 axis also pins shuffle=7 like the r13 manual sweep did)."""
-    for k, v in AXES[name].items():
-        os.environ[k] = v
-    if name == "tz_kiritimati":
-        time.tzset()  # before the JVM starts, so Java inherits the zone
-    return 7 if name == "local7" else None
+
+def axis_readback(spark, name: str) -> dict[str, str]:
+    """Each setting of axis ``name`` as the live session reports it."""
+    return {
+        k: _LIVE_ENV[k](spark) if k in _LIVE_ENV else spark.conf.get(k)
+        for k in AXES[name]
+    }
 
 
 def main() -> int:
@@ -127,15 +141,17 @@ def main() -> int:
         from bench import current_round
 
         axis = _AXIS_ORDER[(current_round() - 14) % len(_AXIS_ORDER)]
-    shuffle_override = None
     if axis != "none":
-        shuffle_override = _apply_axis(axis)
+        os.environ.update(ENV_AXES.get(axis, {}))
+        time.tzset()  # before the JVM starts, so Java inherits TZ
         print(f"config-robustness axis: {axis} ({AXES[axis]})")
 
     from kafkastreaming_spark.all import ORACLES, QUERIES
     from kafkastreaming_spark.session import get_session
 
-    spark = get_session("verify_local", shuffle_partitions=shuffle_override or 8)
+    spark = get_session("verify_local")
+    for k, v in CONF_AXES.get(axis, {}).items():
+        spark.conf.set(k, v)
 
     con = duckdb.connect()
     for t in TABLES:
@@ -195,6 +211,11 @@ def main() -> int:
     )
     if failures:
         print("failures:", " ".join(failures))
+    axis_live = axis_readback(spark, axis) if axis != "none" else {}
+    axis_lost = {k: v for k, v in axis_live.items() if v != AXES[axis][k]}
+    if axis_live:
+        lost = f" — NOT IN EFFECT: {axis_lost}" if axis_lost else ""
+        print(f"axis {axis} read back after the last key: {axis_live}{lost}")
     if args.report:
         from bench import current_round
 
@@ -203,7 +224,7 @@ def main() -> int:
             json.dump(
                 {
                     "axis": axis,
-                    "axis_env": AXES.get(axis, {}),
+                    "axis_live": axis_live,
                     "sf": args.sf,
                     "n_pass": n_pass,
                     "n_fail": n_fail,
@@ -216,7 +237,7 @@ def main() -> int:
             )
         print(f"report written: {path}")
     spark.stop()
-    return 1 if n_fail else 0
+    return 1 if n_fail or axis_lost else 0
 
 
 def compare(spdf: pd.DataFrame, odf: pd.DataFrame) -> tuple[bool, str]:
